@@ -27,6 +27,19 @@ REPS = int(os.environ.get("BENCH_QUERY_REPS", "3"))
 CACHE = REPO / ".cache"
 
 
+def bench_dps(spark, n_conv: int) -> int:
+    """The shard width bench.py derives for this corpus and core count, so
+    this script opens ITS index (a lexicographic pick of the cached
+    ``ix_n*_dps*`` directories would sort dps16384 after dps131072)."""
+    if os.environ.get("SPARK_GRAFT_DPS"):
+        return int(os.environ["SPARK_GRAFT_DPS"])
+    from bitcoin_ledger_2es_spark.sources.transcripts import read_transcripts
+
+    corpus = CACHE / f"transcripts_n{n_conv}_s42.parquet"
+    docs_total_est = int(read_transcripts(spark, str(corpus)).count() * 1.25)
+    return max(4096, 1 << (docs_total_est // (2 * CPUS)).bit_length())
+
+
 def main() -> None:
     from bitcoin_ledger_2es_spark import BM25Searcher
     from bitcoin_ledger_2es_spark.config import DEFAULT
@@ -41,11 +54,10 @@ def main() -> None:
     spark = get_spark("bench_extra", cores=CPUS,
                       shuffle_partitions=max(32, 2 * CPUS))
     spark.sparkContext.setLogLevel("ERROR")
-    # same dps derivation as bench.py so we open ITS index
-    cands = sorted(CACHE.glob(f"ix_n{n_conv}_dps*"))
-    if not cands:
-        raise SystemExit(f"no index for n_conv={n_conv} under {CACHE} — run bench.py first")
-    ix = read_index(spark, str(cands[-1]), DEFAULT)
+    ix_path = CACHE / f"ix_n{n_conv}_dps{bench_dps(spark, n_conv)}"
+    if not ix_path.is_dir():
+        raise SystemExit(f"no index {ix_path} — run bench.py first")
+    ix = read_index(spark, str(ix_path), DEFAULT)
     searcher = BM25Searcher(ix)
     assert searcher.aligned
     qset = gen_query_set()

@@ -62,11 +62,6 @@ class EngineConfig:
     # rows are appended per wave so a killed build resumes mid-merge
     # (north_rule: "resumable from checkpoint with per-partition lineage").
     n_waves: int = 4
-    # Candidate-postings threshold per (shard, query) below which the exact
-    # vectorized scorer is used instead of the BMW skipping scorer. Both are
-    # rank-identical; BMW wins when lists are long (head terms at scale),
-    # vectorized numpy wins when the whole candidate set is small.
-    wand_min_postings: int = 32768
 
     def content_key(self) -> tuple:
         """The tuple of content-affecting parameters (for lineage checksums)."""

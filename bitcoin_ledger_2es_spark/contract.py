@@ -999,7 +999,7 @@ SQL_MATCH_PHRASE = "\nUNION ALL\n".join(
 # ---------------------------------------------------------------------------
 # B4 full bool surface: must_not (postings-derived exclusion) and
 # should + minimum_should_match, answered by the REAL indexed engine
-# (score_shard_bool kernel) with k unbounded (no selection boundary), vs a
+# (score_shard_clauses kernel) with k unbounded (no selection boundary), vs a
 # DuckDB full-scoring oracle with conditional clause counts. Terms are
 # chosen non-overlapping across clauses so occurrence weights are all 1.
 
@@ -5774,7 +5774,7 @@ SIMPLE_QS_QUERIES = [
 def q_query_string(spark, sf_dir):
     """ES query_string on the REAL engine: Lucene classic syntax
     (functions/querystring.py) parsed and lowered onto ONE pruned postings
-    scan + the generalized bool kernel (operators/wand.py score_shard_qs:
+    scan + the dense clause-group kernel (operators/wand.py score_shard_clauses:
     clause groups, embedded phrase scoring, expansion groups). k unbounded
     so every matching doc is checked against the DuckDB oracle — term
     clauses score BM25, phrases score Lucene PhraseWeight (tf=phrase freq,

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.codec import decode_doc_gaps, decode_positions, decode_tfs
+from .wand import _decode_term_blocks
 
 _POS_BITS = 21  # matches operators/phrase.py packing budget
 
@@ -54,32 +54,22 @@ def _shard_bigram_kernel(dps: int):
         uni_tids: list[int] = []
         uni_cfs: list[int] = []
         for tid, g in pdf.groupby("term_id"):
-            occ_keys = []
-            occ_n = 0
-            for r in g.sort_values("block_id").itertuples(index=False):
-                docs = decode_doc_gaps(
-                    r.doc_id_deltas, int(r.first_doc_id), int(r.n_docs)
+            local, tfs, _dls, pos = _decode_term_blocks(
+                g.sort_values("block_id"), base, positions=True
+            )
+            if pos.size and int(pos.max()) + 1 >= (1 << _POS_BITS):
+                # same guard as the phrase kernel: a doc ending at the
+                # last representable position would make its final
+                # token's key+1 collide with the next doc's position 0
+                raise ValueError(
+                    f"token position {int(pos.max())} exceeds the "
+                    f"bigram-key budget (2^{_POS_BITS} - 1 per doc)"
                 )
-                tfs = decode_tfs(r.tfs)
-                pos = decode_positions(r.poss, tfs)
-                if pos.size and int(pos.max()) + 1 >= (1 << _POS_BITS):
-                    # same guard as the phrase kernel: a doc ending at the
-                    # last representable position would make its final
-                    # token's key+1 collide with the next doc's position 0
-                    raise ValueError(
-                        f"token position {int(pos.max())} exceeds the "
-                        f"bigram-key budget (2^{_POS_BITS} - 1 per doc)"
-                    )
-                local = (docs - base).astype(np.int64)
-                occ_keys.append(
-                    (np.repeat(local, tfs) << np.int64(_POS_BITS)) + pos
-                )
-                occ_n += int(tfs.sum())
-            keys = np.concatenate(occ_keys)
+            keys = (np.repeat(local, tfs) << np.int64(_POS_BITS)) + pos
             key_parts.append(keys)
             tid_parts.append(np.full(keys.size, int(tid), dtype=np.int64))
             uni_tids.append(int(tid))
-            uni_cfs.append(occ_n)
+            uni_cfs.append(int(tfs.sum()))
         keys = np.concatenate(key_parts)
         tids = np.concatenate(tid_parts)
         order = np.argsort(keys, kind="stable")

@@ -24,7 +24,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..functions.codec import decode_doc_gaps, decode_positions, decode_tfs
+from .wand import _decode_term_blocks
 
 _POS_BITS = 21  # max token position per doc < 2^21 - phrase_len (asserted)
 
@@ -37,18 +37,9 @@ def _slot_keys(blocks: pd.DataFrame, slot: int, n_slots: int, base: int):
     adjusted positions non-negative for every slot); ``docs``/``dls`` are
     posting-level (for dl lookup after the intersection).
     """
-    docs_parts, tf_parts, dl_parts, pos_parts = [], [], [], []
-    for r in blocks.sort_values("block_id").itertuples(index=False):
-        docs_parts.append(decode_doc_gaps(r.doc_id_deltas, int(r.first_doc_id), int(r.n_docs)))
-        tfs = decode_tfs(r.tfs)
-        tf_parts.append(tfs)
-        dl_parts.append(decode_tfs(r.dls))
-        pos_parts.append(decode_positions(r.poss, tfs))
-    docs = np.concatenate(docs_parts)
-    tfs = np.concatenate(tf_parts)
-    dls = np.concatenate(dl_parts)
-    pos = np.concatenate(pos_parts)
-    local = (docs - base).astype(np.int64)
+    local, tfs, dls, pos = _decode_term_blocks(
+        blocks.sort_values("block_id"), base, positions=True
+    )
     if pos.size and int(pos.max()) + n_slots >= (1 << _POS_BITS):
         # a real error, not an assert: under python -O an assert is
         # stripped and overflow would silently corrupt the packed keys

@@ -1,4 +1,4 @@
-"""Per-shard top-k scoring: block-max WAND + vectorized exact scorer (C7-C9).
+"""Per-shard top-k scoring: one dense clause-group kernel + block-max WAND (C7-C9).
 
 Sharding mirrors Elasticsearch's architecture: every shard holds the full
 posting data for its contiguous doc_id range, so top-k within a shard is
@@ -11,13 +11,16 @@ never the docmap (no per-query Arrow shipping of doc metadata).
 
 Two rank-identical scorers:
 
+  * ``score_shard_clauses`` — the dense kernel: decode all candidate
+    blocks, one fused numpy pass over a per-shard score array, clause
+    groups for bool/query_string membership, phrase clauses, then ONE
+    mask + ``after`` cursor + tie-safe selection tail (``_select``).
+    ``score_shard_exact`` (match OR/AND) is a mode -> groups adapter.
   * ``score_shard_bmw`` — document-at-a-time WAND with per-block max-score
     skipping (Ding & Suel, SIGIR 2011): blocks whose upper bound cannot
-    beat the running threshold theta are never decoded. Wins when posting
-    lists are long (head terms at 100 TB scale).
-  * ``score_shard_exact`` — decode all candidate blocks, one fused numpy
-    pass over a dense per-shard score array. Wins when the candidate set
-    is small; also the oracle-shaped reference for the BMW path.
+    beat the running threshold theta are never decoded. Its Python step
+    costs ~50x the dense per-posting cost, so ``use_bmw`` engages it only
+    for OR over one dominant long list with rare companions and small k.
 
 Both honor the determinism contract (functions/bm25.py): f64 accumulation
 in ascending term_id order, f32 emission, ties (score desc, doc_id asc).
@@ -35,10 +38,27 @@ import numpy as np
 import pandas as pd
 
 from ..functions.bm25 import contrib
-from ..functions.codec import decode_doc_gaps, decode_tfs, decode_varints
+from ..functions.codec import decode_doc_gaps, decode_positions, decode_tfs, decode_varints
 
 _INF = np.int64(2**62)
 _UB_SLACK = 1.0 + 1e-6
+# shard postings (summed over the query's terms) below which BMW never
+# pays: the dense kernel scores the whole candidate set faster
+BMW_MIN_POSTINGS = 32768
+
+
+def use_bmw(sizes: list[int], k: int) -> bool:
+    """Scorer selection for one OR shard-query, from its per-term posting
+    counts. Cost model (measured): the Python DAAT step costs ~50x the
+    dense per-posting cost, so BMW must SKIP ~98% of the candidate
+    postings to win. That needs a small k (theta must rise fast) and ONE
+    dominant list with only rare companions (the dominant list is what
+    gets skipped)."""
+    total = sum(sizes)
+    return (
+        len(sizes) >= 2 and k <= 32 and total >= BMW_MIN_POSTINGS
+        and (total - max(sizes)) * 64 <= total
+    )
 
 
 class _TermList:
@@ -207,42 +227,11 @@ def score_shard_bmw(
     return _emit(heap)
 
 
-def score_shard_conjunction(
-    term_lists: list[_TermList],
-    k: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-    after: tuple[float, int] | None = None,
-) -> pd.DataFrame:
-    """Exact top-k for bool-must (AND): lead with the rarest list, block-skip
-    seek the others; score docs present in every list."""
-    heap: list[tuple[float, int]] = []
-    if not term_lists or any(t.cur >= _INF for t in term_lists):
-        return _emit(heap)
-    lead = min(term_lists, key=lambda t: len(t.firsts))
-    others = [t for t in term_lists if t is not lead]
-    while lead.cur < _INF:
-        target = lead.cur
-        ok = True
-        for tl in others:
-            tl.seek(target)
-            if tl.cur != target:
-                ok = False
-                if tl.cur >= _INF:
-                    return _emit(heap)
-                lead.seek(tl.cur)
-                break
-        if ok:
-            s32 = _score_doc(term_lists, avgdl, k1, b)
-            if _after_ok(s32, int(target), after):
-                _push(heap, k, s32, int(target))
-            lead.next()
-    return _emit(heap)
-
-
-def _decode_term_blocks(blocks: pd.DataFrame, shard_base: int):
-    """Decode one term's blocks -> (local_docs, tfs, dls) numpy arrays.
+def _decode_term_blocks(blocks: pd.DataFrame, shard_base: int, positions: bool = False):
+    """Decode one term's blocks -> (local_docs, tfs, dls) numpy arrays,
+    plus the absolute token positions (one per occurrence, posting
+    order) when ``positions``. Blocks decode in the frame's row order;
+    positional callers pass them sorted by block_id.
 
     Batch-vectorized across the term's blocks: each varint stream is
     decoded in ONE pass over the concatenated block buffers (varints are
@@ -270,6 +259,10 @@ def _decode_term_blocks(blocks: pd.DataFrame, shard_base: int):
     # cancel the running carry at each block start so every block's
     # cumsum restarts from its absolute first_doc_id (exact in int64)
     docs = cs - np.repeat(cs[starts] - firsts, npb)
+    if positions:
+        # per-posting position segments are self-delimiting by tf, so the
+        # concatenated streams decode like one block's
+        return docs - shard_base, tfs, dls, decode_positions(b"".join(blocks["poss"]), tfs)
     return docs - shard_base, tfs, dls
 
 
@@ -290,189 +283,154 @@ def decode_term_contrib(
     return docs, contrib(tfs, dls, t_idf, avgdl, k1, b)
 
 
-def score_shard_bool(
-    must_meta: list[tuple[int, float, float, pd.DataFrame]],
-    should_meta: list[tuple[int, float, float, pd.DataFrame]],
-    excl_blocks: list[pd.DataFrame],
+def _empty_hits() -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
+                         "score": pd.Series([], dtype=np.float32)})
+
+
+def _select(
+    scores: np.ndarray,
+    mask: np.ndarray,
     shard_base: int,
-    span: int,
     allowed: np.ndarray | None,
     k: int,
-    min_should: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-    after: tuple[float, int] | None = None,
+    after: tuple[float, int] | None,
+    ordered: bool,
 ) -> pd.DataFrame:
-    """ES bool query within one shard (B4 full surface): ``must`` clauses
-    all required and scoring, ``should`` clauses scoring with at least
-    ``min_should`` matching (Lucene minimum_should_match), ``must_not``
-    postings building a non-scoring forbidden mask — the same exclusion
-    shape as the ``allowed`` filter mask, derived from postings instead of
-    docmap columns. Scores accumulate f64 in ascending term_id order over
-    the union of scoring clauses (the engine's standard determinism
-    contract); ties (score_f32 desc, doc_id asc)."""
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
-                          "score": pd.Series([], dtype=np.float32)})
-    if not must_meta and not should_meta:
-        # a shard whose pruned scan carried ONLY must_not postings has no
-        # scoring clause here: without this guard the mask would default
-        # to all-ones and emit every doc in the span as a score-0 ghost
-        return empty
-    scores = np.zeros(span, dtype=np.float64)
-    seen_must = np.zeros(span, dtype=np.int32)
-    seen_should = np.zeros(span, dtype=np.int32)
-
-    # scoring pass: one combined weight per term_id (a term in both must
-    # and should scores once per clause — ES sums clause scores), strict
-    # ascending-term_id accumulation across the union
-    by_tid: dict[int, dict] = {}
-    for role, metas in (("must", must_meta), ("should", should_meta)):
-        for tid, t_idf, w, blocks in metas:
-            e = by_tid.setdefault(tid, {"idf": t_idf, "w": 0.0, "blocks": blocks,
-                                        "must": False, "should": False})
-            e["w"] += w
-            e[role] = True
-    for tid in sorted(by_tid):
-        e = by_tid[tid]
-        dec = _decode_term_blocks(e["blocks"], shard_base)
-        if dec is None:
-            continue
-        docs, tfs, dls = dec
-        scores[docs] += e["w"] * contrib(tfs, dls, e["idf"], avgdl, k1, b)
-        if e["must"]:
-            seen_must[docs] += 1
-        if e["should"]:
-            seen_should[docs] += 1
-
-    n_must = sum(1 for _ in must_meta)
-    mask = seen_must == n_must if n_must else np.ones(span, dtype=bool)
-    if min_should > 0:
-        mask &= seen_should >= min_should
-    elif n_must == 0 and should_meta:
-        mask &= seen_should > 0  # pure-should bool: at least one clause
-    for blocks in excl_blocks:
-        dec = _decode_term_blocks(blocks, shard_base)
-        if dec is not None:
-            mask[dec[0]] = False
+    """The dense kernel's selection tail: restrict ``mask`` by the
+    non-scoring ``allowed`` filter and the ES search_after cursor (hits at
+    or before ``after`` in (score desc, doc_id asc) order drop out), then
+    select the top k in f32 emission space: a partial select of a
+    tie-safe superset, exact (score desc, doc_id asc) ordering within it.
+    ``ordered=False`` skips the output sort when no cap applies; emission
+    is then doc_id ascending."""
     if allowed is not None:
         mask &= allowed
     if after is not None:
         s_cut, d_cut = np.float32(after[0]), int(after[1])
         s32_all = scores.astype(np.float32)
-        ids = np.arange(span, dtype=np.int64) + shard_base
+        ids = np.arange(scores.size, dtype=np.int64) + shard_base
         mask &= (s32_all < s_cut) | ((s32_all == s_cut) & (ids > d_cut))
-
     cand = np.flatnonzero(mask)
     if cand.size == 0:
-        return empty
+        return _empty_hits()
     s32 = scores[cand].astype(np.float32)
     if cand.size > k:
         kth = np.partition(-s32, k - 1)[k - 1]
         sup = np.flatnonzero(-s32 <= kth)
         order = sup[np.lexsort((cand[sup], -s32[sup].astype(np.float64)))][:k]
-    else:
-        order = np.lexsort((cand, -s32.astype(np.float64)))[:k]
-    return pd.DataFrame(
-        {
-            "doc_id": (cand[order] + shard_base).astype(np.int64),
-            "score": s32[order],
-        }
-    )
+        cand, s32 = cand[order], s32[order]
+    elif ordered:
+        order = np.lexsort((cand, -s32.astype(np.float64)))
+        cand, s32 = cand[order], s32[order]
+    return pd.DataFrame({"doc_id": (cand + shard_base).astype(np.int64), "score": s32})
 
 
-def score_shard_qs(
-    term_meta: list[tuple[int, float, float, pd.DataFrame]],
+def score_shard_clauses(
+    term_meta: list[tuple[int, float, float, object]],
     must_groups: list[list[int]],
     should_groups: list[list[int]],
+    min_should: int,
     excl_blocks: list[pd.DataFrame],
     phrase_meta: list[tuple[list[pd.DataFrame], float, float, str, int, bool]],
     shard_base: int,
     span: int,
     allowed: np.ndarray | None,
     k: int,
-    min_should: int,
     avgdl: float,
     k1: float,
     b: float,
     after: tuple[float, int] | None = None,
+    ordered: bool = True,
 ) -> pd.DataFrame:
-    """Lucene classic query_string within one shard: the bool kernel
-    generalized to CLAUSE GROUPS and embedded phrase clauses.
+    """The dense shard kernel: a Lucene BooleanQuery of clause groups and
+    phrase clauses over one shard's dense doc_id range ``span``.
 
     * ``term_meta``: every scoring term once — (term_id, idf, weight,
       blocks), weight pre-summed across clauses (a term in two clauses
-      scores twice, as in ES bool).
+      scores twice, as in ES bool). ``blocks`` is the term's raw postings
+      frame or the pre-decoded ``(local_docs, contrib)`` pair of
+      ``decode_term_contrib`` (msearch decodes and scores a term once per
+      shard; ``weight * contrib`` is the same elementwise f64 product).
     * ``must_groups`` / ``should_groups``: each entry is the term_id set
-      of ONE clause; a multi-term expansion (``pre*`` -> 50 terms) or a
-      multi-token analyzed clause is a single group that counts as
-      matched when ANY member matches (Lucene BooleanQuery counts
-      clauses, not terms). Groups may reference term_ids absent from
-      this shard's scan — those members simply never match here.
+      of ONE clause, matched when ANY member matches (a ``pre*``
+      expansion or a multi-token clause is one group — Lucene counts
+      clauses, not terms). Members absent from this shard never match
+      here; ``min_should`` is minimum_should_match over should clauses
+      (0: none required unless there is no must clause).
+    * ``excl_blocks``: must_not postings, a non-scoring forbidden mask.
     * ``phrase_meta``: (slot_blocks, sum_idf, weight, role, slop,
       ordered) per phrase clause; role in must/should/must_not. Phrase
-      score = BM25 with tf = phrase freq (operators/phrase.py); a must
-      phrase counts toward the must total, a must_not phrase extends the
-      exclusion mask.
+      score = BM25 with tf = phrase freq (operators/phrase.py).
+    * ``allowed``: optional boolean filter mask indexed by doc_id -
+      shard_base; ``after``: ES search_after cursor (score_f32, doc_id);
+      ``ordered``: see ``_select``.
 
-    Determinism contract extension: f64 accumulation runs ascending
-    term_id over ``term_meta`` FIRST, then phrase clauses in query
-    order — mirrored by the DuckDB oracle's left-to-right ``+`` of the
-    term-sum and phrase contributions. Ties (score_f32 desc, doc_id asc).
+    Determinism contract: f64 accumulation runs ascending term_id over
+    ``term_meta`` FIRST, then phrase clauses in query order (the DuckDB
+    oracle's left-to-right ``+``); f32 emit; ties (score desc, doc_id
+    asc). Match OR/AND and bool are the single-term-group special cases.
     """
-    from .phrase import phrase_doc_freqs
-
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
-                          "score": pd.Series([], dtype=np.float32)})
     if not term_meta and not any(p[3] != "must_not" for p in phrase_meta):
-        return empty  # no scoring clause reached this shard
+        # no scoring clause reached this shard (e.g. its pruned scan held
+        # only must_not postings): the mask would otherwise default to
+        # all-ones and emit every doc in the span as a score-0 ghost
+        return _empty_hits()
     scores = np.zeros(span, dtype=np.float64)
     tid_docs: dict[int, np.ndarray] = {}
     for tid, t_idf, w, blocks in sorted(term_meta, key=lambda m: m[0]):
-        dec = _decode_term_blocks(blocks, shard_base)
-        if dec is None:
-            continue
-        docs, tfs, dls = dec
-        scores[docs] += w * contrib(tfs, dls, t_idf, avgdl, k1, b)
+        if isinstance(blocks, tuple):
+            docs, base = blocks
+        else:
+            dec = _decode_term_blocks(blocks, shard_base)
+            if dec is None:
+                continue
+            docs, tfs, dls = dec
+            base = contrib(tfs, dls, t_idf, avgdl, k1, b)
+        scores[docs] += w * base
         tid_docs[tid] = docs
     phrase_hits: list[tuple[str, np.ndarray]] = []
-    for slot_blocks, sum_idf, w, role, slop, ordered in phrase_meta:
-        docs, pf, dl_docs, dl_vals = phrase_doc_freqs(
-            slot_blocks, shard_base, slop, ordered
-        )
-        if docs.size and role != "must_not":
-            dl = dl_vals[np.searchsorted(dl_docs, docs)].astype(np.float64)
-            scores[docs] += (
-                w * sum_idf * pf * (k1 + 1.0)
-                / (pf + k1 * (1.0 - b + b * dl / avgdl))
+    if phrase_meta:
+        from .phrase import phrase_doc_freqs
+
+        for slot_blocks, sum_idf, w, role, slop, p_ordered in phrase_meta:
+            docs, pf, dl_docs, dl_vals = phrase_doc_freqs(
+                slot_blocks, shard_base, slop, p_ordered
             )
-        phrase_hits.append((role, docs))
+            if docs.size and role != "must_not":
+                dl = dl_vals[np.searchsorted(dl_docs, docs)].astype(np.float64)
+                scores[docs] += (
+                    w * sum_idf * pf * (k1 + 1.0)
+                    / (pf + k1 * (1.0 - b + b * dl / avgdl))
+                )
+            phrase_hits.append((role, docs))
 
-    def group_mask(tids: list[int]) -> np.ndarray:
-        m = np.zeros(span, dtype=bool)
-        for tid in tids:
-            d = tid_docs.get(tid)
-            if d is not None:
-                m[d] = True
-        return m
+    def clauses_matched(groups: list[list[int]], role: str) -> tuple[np.ndarray, int]:
+        """(per-doc count of matched ``role`` clauses, clause total). The
+        total counts EVERY clause of the query, including ones whose
+        terms are absent from this shard (a doc here cannot match them)."""
+        seen = np.zeros(span, dtype=np.int32)
+        for g in groups:
+            if len(g) == 1:
+                d = tid_docs.get(g[0])
+                if d is not None:
+                    seen[d] += 1  # a term's docs are unique
+                continue
+            m = np.zeros(span, dtype=bool)
+            for tid in g:
+                d = tid_docs.get(tid)
+                if d is not None:
+                    m[d] = True
+            seen += m
+        n = len(groups)
+        for r, docs in phrase_hits:
+            if r == role:
+                seen[docs] += 1
+                n += 1
+        return seen, n
 
-    # membership: n_must counts EVERY must clause in the query (including
-    # ones whose terms are absent from this shard — a doc here cannot
-    # contain them, so the shard correctly emits nothing)
-    n_must = len(must_groups) + sum(1 for r, _ in phrase_hits if r == "must")
-    seen_must = np.zeros(span, dtype=np.int32)
-    for g in must_groups:
-        seen_must += group_mask(g)
-    seen_should = np.zeros(span, dtype=np.int32)
-    for g in should_groups:
-        seen_should += group_mask(g)
-    n_should = len(should_groups) + sum(1 for r, _ in phrase_hits if r == "should")
-    for role, docs in phrase_hits:
-        if role == "must":
-            seen_must[docs] += 1
-        elif role == "should":
-            seen_should[docs] += 1
-
+    seen_must, n_must = clauses_matched(must_groups, "must")
+    seen_should, n_should = clauses_matched(should_groups, "should")
     mask = seen_must == n_must if n_must else np.ones(span, dtype=bool)
     if min_should > 0:
         mask &= seen_should >= min_should
@@ -485,34 +443,11 @@ def score_shard_qs(
     for role, docs in phrase_hits:
         if role == "must_not":
             mask[docs] = False
-    if allowed is not None:
-        mask &= allowed
-    if after is not None:
-        s_cut, d_cut = np.float32(after[0]), int(after[1])
-        s32_all = scores.astype(np.float32)
-        ids = np.arange(span, dtype=np.int64) + shard_base
-        mask &= (s32_all < s_cut) | ((s32_all == s_cut) & (ids > d_cut))
-
-    cand = np.flatnonzero(mask)
-    if cand.size == 0:
-        return empty
-    s32 = scores[cand].astype(np.float32)
-    if cand.size > k:
-        kth = np.partition(-s32, k - 1)[k - 1]
-        sup = np.flatnonzero(-s32 <= kth)
-        order = sup[np.lexsort((cand[sup], -s32[sup].astype(np.float64)))][:k]
-    else:
-        order = np.lexsort((cand, -s32.astype(np.float64)))[:k]
-    return pd.DataFrame(
-        {
-            "doc_id": (cand[order] + shard_base).astype(np.int64),
-            "score": s32[order],
-        }
-    )
+    return _select(scores, mask, shard_base, allowed, k, after, ordered)
 
 
 def score_shard_exact(
-    term_meta: list[tuple[int, float, float, pd.DataFrame]],
+    term_meta: list[tuple[int, float, float, object]],
     shard_base: int,
     span: int,
     allowed: np.ndarray | None,
@@ -524,72 +459,11 @@ def score_shard_exact(
     after: tuple[float, int] | None = None,
     ordered: bool = True,
 ) -> pd.DataFrame:
-    """Vectorized exact scorer over a dense per-shard array.
-
-    ``term_meta``: [(term_id, idf, weight, blocks_pdf)] sorted by term_id.
-    ``span``: shard width (dense doc_id range size).
-    ``allowed``: optional boolean mask indexed by doc_id - shard_base
-    (non-scoring filter context, B4/B6).
-    ``after``: ES search_after cursor (score_f32, doc_id) — hits at or
-    before it in (score desc, doc_id asc) rank order are masked out.
-    ``ordered=False`` skips the (score desc, doc_id asc) output sort WHEN
-    no cap applies (``cand.size <= k``): callers that re-sort or
-    re-aggregate downstream (the global TakeOrdered of top_k, the
-    per-query rank window of msearch, every compound/all-match fold) pay
-    a full-match-set lexsort per shard for nothing. Emission is then
-    doc_id-ascending (flatnonzero order) — still deterministic. The
-    capped branch always sorts (the cap IS a rank selection).
-    """
-    scores = np.zeros(span, dtype=np.float64)
-    seen = np.zeros(span, dtype=np.int32)
-    for term_id, t_idf, weight, blocks in sorted(term_meta, key=lambda m: m[0]):
-        if isinstance(blocks, tuple):
-            # pre-decoded (docs, base_contrib) from decode_term_contrib —
-            # the msearch batch kernel decodes and scores each term ONCE
-            # per shard and shares it across every query using the term.
-            # weight * base is the identical elementwise f64 product the
-            # inline path computes (c = weight * contrib(...)).
-            docs, base = blocks
-            scores[docs] += weight * base
-            seen[docs] += 1
-            continue
-        dec = _decode_term_blocks(blocks, shard_base)
-        if dec is None:
-            continue
-        docs, tfs, dls = dec
-        c = weight * contrib(tfs, dls, t_idf, avgdl, k1, b)
-        scores[docs] += c
-        seen[docs] += 1
-    mask = seen == len(term_meta) if mode == "and" else seen > 0
-    if allowed is not None:
-        mask &= allowed
-    if after is not None:
-        s_cut, d_cut = np.float32(after[0]), int(after[1])
-        s32_all = scores.astype(np.float32)
-        ids = np.arange(span, dtype=np.int64) + shard_base
-        mask &= (s32_all < s_cut) | ((s32_all == s_cut) & (ids > d_cut))
-    cand = np.flatnonzero(mask)
-    if cand.size == 0:
-        return pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
-                             "score": pd.Series([], dtype=np.float32)})
-    s32 = scores[cand].astype(np.float32)
-    if cand.size > k:
-        # partial-select a tie-safe superset, then exact ordering within it
-        kth = np.partition(-s32, k - 1)[k - 1]
-        sup = np.flatnonzero(-s32 <= kth)
-        order = sup[np.lexsort((cand[sup], -s32[sup].astype(np.float64)))][:k]
-    elif not ordered:
-        return pd.DataFrame(
-            {
-                "doc_id": (cand + shard_base).astype(np.int64),
-                "score": s32,
-            }
-        )
-    else:
-        order = np.lexsort((cand, -s32.astype(np.float64)))[:k]
-    return pd.DataFrame(
-        {
-            "doc_id": (cand[order] + shard_base).astype(np.int64),
-            "score": s32[order],
-        }
-    )
+    """Match query (``mode`` "or" / "and") on the dense kernel: one
+    single-term should group per term for OR, one must group per term
+    for AND. ``term_meta``: [(term_id, idf, weight, blocks)], blocks raw
+    or pre-decoded as in ``score_shard_clauses``."""
+    groups = [[m[0]] for m in term_meta]
+    must, should = (groups, []) if mode == "and" else ([], groups)
+    return score_shard_clauses(term_meta, must, should, 0, [], [], shard_base, span,
+                               allowed, k, avgdl, k1, b, after=after, ordered=ordered)

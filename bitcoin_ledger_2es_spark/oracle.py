@@ -176,7 +176,7 @@ class PandasOracle:
         minimum_should_match: int | None = None,
     ) -> pd.DataFrame:
         """ES bool query oracle (mirrors BM25Searcher.bool_query /
-        operators/wand.py score_shard_bool, same determinism contract):
+        operators/wand.py score_shard_clauses, same determinism contract):
         must all required + scoring, should scoring with >= min_m matching,
         must_not a non-scoring exclusion; a term in both must and should
         scores once per clause (summed weights)."""
@@ -294,7 +294,7 @@ class PandasOracle:
         minimum_should_match: int | None = None,
     ) -> pd.DataFrame:
         """Lucene classic query_string oracle — mirrors
-        BM25Searcher.query_string / operators/wand.py score_shard_qs (the
+        BM25Searcher.query_string / operators/wand.py score_shard_clauses (the
         lockstep contract): clause groups (a multi-token or expanded
         clause counts once toward must/minimum_should_match, every member
         scores), ordered phrases embedded as scoring clauses (tf = phrase

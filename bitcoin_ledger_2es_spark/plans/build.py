@@ -228,8 +228,8 @@ def read_index(spark: SparkSession, path: str, cfg: EngineConfig = DEFAULT) -> I
     authoritative for every content-affecting knob (k1/b, docs_per_shard,
     block_size, analyzer): those are adopted into the returned cfg, so a
     caller's mismatched cfg can never silently mis-decode the index.
-    Execution-only knobs (shuffle_partitions, n_waves, wand_min_postings)
-    keep the caller's values."""
+    Execution-only knobs (shuffle_partitions, n_waves) keep the caller's
+    values."""
     docmap = spark.read.parquet(f"{path}/docmap")
     postings = spark.read.parquet(f"{path}/postings")
     dictionary = spark.read.parquet(f"{path}/dictionary")

@@ -1077,8 +1077,13 @@ def esql(
             raise ESQLError("METADATA _score needs a FROM over an index")
         df = df.withColumn("_score", F.lit(0.0).cast("float"))
 
+    # the FORK fusion below scores branches over the whole index, so it
+    # is sound only on the untouched FROM frame (no alias filter or
+    # tombstones either — those restrict it before any stage runs)
+    untouched = (with_score and searcher._deletes is None
+                 and searcher._default_filter is None)
     return _run_stages(df, stages[1:], searcher, with_score, True,
-                       enrich, lookups)
+                       enrich, lookups, untouched=untouched)
 
 
 def _split_stages(query: str) -> "list[str]":
@@ -1216,12 +1221,16 @@ def _fused_fork_topk(df, heads, searcher):
 
 
 def _run_stages(df, stages, searcher, with_score, first_where,
-                enrich, lookups):
+                enrich, lookups, untouched=False):
     """Apply a list of ES|QL stages to ``df``. Factored out of
     ``esql()`` so FORK can recurse: each branch runs this over the
     current frame with its own ``first_where`` state (a scoring MATCH
-    is legal in a branch's first WHERE when FORK is the first stage)."""
+    is legal in a branch's first WHERE when FORK is the first stage).
+    ``untouched``: ``df`` is the scored FROM frame exactly as ``esql()``
+    built it; every stage clears it (LIMIT/SORT/SAMPLE/MV_EXPAND leave
+    ``first_where`` set but still change the rows a branch sees)."""
     for stage in stages:
+        fork_fusable, untouched = untouched, False
         sm = re.match(r"^([A-Za-z_]+)\s*(.*)$", stage, re.S)
         if not sm:
             raise ESQLError(f"cannot parse stage: {stage[:40]!r}")
@@ -1555,15 +1564,14 @@ def _run_stages(df, stages, searcher, with_score, first_where,
             branches = _fork_branches(rest)
             # fused single-scan lowering: when EVERY branch is a scored
             # top-k head (WHERE MATCH | SORT _score DESC, doc_id ASC |
-            # LIMIT n), one union-of-terms postings scan scores all
-            # branches (shard-local caps at each branch's limit — the
-            # branch LIMIT is a per-branch global selection edge, so the
-            # cap is the plain top_k argument) and one broadcast fetch
-            # join attaches the base frame. Per-branch scans otherwise.
+            # LIMIT n) over the untouched FROM frame, one union-of-terms
+            # postings scan scores all branches (shard-local caps at each
+            # branch's limit — the branch LIMIT is a per-branch global
+            # selection edge, so the cap is the plain top_k argument) and
+            # one broadcast fetch join attaches the base frame. Per-branch
+            # scans otherwise.
             fused = None
-            if (with_score and first_where and searcher is not None
-                    and searcher._deletes is None
-                    and searcher._default_filter is None):
+            if fork_fusable:
                 heads = [_fork_head_topk(b) for b in branches]
                 if all(h is not None for h in heads):
                     fused = _fused_fork_topk(df, heads, searcher)

@@ -7,8 +7,9 @@ Two-phase, exactly like ES query-then-fetch:
      the sorted dictionary parquet — a tiny collect); scan ONLY the
      postings of those term_ids (filter pushdown + row-group pruning; the
      blocks inline doc lengths, so nothing else is read); per shard, run
-     the scorer (BMW skipping for long lists, fused vectorized scoring for
-     short ones — both exact); each shard emits at most k candidates.
+     the scorer (BMW skipping when one long list dominates, the dense
+     vectorized kernel otherwise — both exact); each shard emits at most
+     k candidates.
   2. **fetch phase** — merge the <= k*n_shards candidates globally
      (score_f32 desc, doc_id asc — rank-stable ties), keep k, broadcast-join
      docmap for (conv_id, turn_idx, is_rollup).
@@ -36,9 +37,9 @@ from ..operators.wand import (
     _decode_term_blocks,
     decode_term_contrib,
     score_shard_bmw,
-    score_shard_bool,
-    score_shard_conjunction,
+    score_shard_clauses,
     score_shard_exact,
+    use_bmw,
 )
 from .build import IndexFrames
 
@@ -47,8 +48,7 @@ _RESULT_DDL = "rank int, doc_id long, score float, conv_id string, turn_idx int,
 _EMPTY_CAND = pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64), "score": pd.Series([], dtype=np.float32)})
 
 
-def _shard_kernel(term_meta, k, mode, avgdl, k1, b, dps, use_wand, wand_min, has_filter,
-                  after=None):
+def _shard_kernel(term_meta, k, mode, avgdl, k1, b, dps, has_filter, after=None):
     """Kernel over one shard's (term-pruned) postings; pandas in, pandas out.
 
     Returns a ONE-arg function (groupBy().applyInPandas passes (key, pdf)
@@ -74,33 +74,12 @@ def _shard_kernel(term_meta, k, mode, avgdl, k1, b, dps, use_wand, wand_min, has
             allowed = np.zeros(dps, dtype=bool)
             allowed[right["doc_id"].to_numpy(np.int64) - base] = right["_allowed"].to_numpy(bool)
 
-        # scorer selection (both exact, rank-identical — tests pin it).
-        # Cost model, measured on this host: the python DAAT step costs
-        # ~50x the fused vectorized per-posting cost, so BMW must SKIP
-        # ~98% of the candidate postings to win. That needs (a) a small k
-        # (theta must rise fast), and (b) ONE dominant list with only
-        # rare companions (the dominant list is what gets skipped; if the
-        # non-max lists are a material fraction of the total, the loop
-        # visits too much). Everything else goes to the vectorized
-        # decode-all scorer. Conjunctions use the seek loop when the
-        # rarest (lead) list is short; otherwise dense intersection wins.
-        total_postings = int(left["n_docs"].sum())
-        per_term_n = left.groupby("term_id")["n_docs"].sum()
-        if use_wand and allowed is None:
-            if mode == "and" and int(per_term_n.min()) <= max(4096, k * 4):
-                lists = [
-                    _TermList(tid, t_idf, w, left[left["term_id"] == tid])
-                    for tid, t_idf, w in tm
-                    if tid in present
-                ]
-                return score_shard_conjunction(lists, k, avgdl, k1, b, after=after)
-            non_max = total_postings - int(per_term_n.max())
-            if (
-                mode == "or" and len(present) >= 2
-                and total_postings >= wand_min
-                and k <= 32
-                and non_max * 64 <= total_postings
-            ):
+        # scorer selection (both exact, rank-identical — tests pin it):
+        # BMW only where its block skipping pays (wand.use_bmw), the
+        # dense kernel everywhere else
+        if mode == "or" and allowed is None:
+            per_term_n = left.groupby("term_id")["n_docs"].sum()
+            if use_bmw(per_term_n.tolist(), k):
                 lists = [
                     _TermList(tid, t_idf, w, left[left["term_id"] == tid])
                     for tid, t_idf, w in tm
@@ -217,7 +196,7 @@ def _fold_tagged_scores(subs: "list[DataFrame]") -> DataFrame:
 
 class BM25Searcher:
     def __init__(
-        self, ix: IndexFrames, use_wand: bool = True, aligned: bool | None = None,
+        self, ix: IndexFrames, aligned: bool | None = None,
         default_doc_filter: Column | None = None,
     ):
         """``default_doc_filter``: a non-scoring docmap predicate applied
@@ -244,7 +223,6 @@ class BM25Searcher:
           SPLIT across tasks and scored partially — silent wrong results).
         * ``False``: always the grouped path."""
         self.ix = ix
-        self.use_wand = use_wand
         if aligned is None:
             self.aligned = aligned_layout_ok(ix)
         elif aligned:
@@ -398,7 +376,7 @@ class BM25Searcher:
         from ..streaming.compaction import expunge_deletes
 
         clean = expunge_deletes(self._spark, self.ix, self._deletes)
-        return BM25Searcher(clean, use_wand=self.use_wand)
+        return BM25Searcher(clean)
 
     def _lookup_terms(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         missing = [t for t in terms if t not in self._term_cache]
@@ -487,7 +465,7 @@ class BM25Searcher:
             after = (float(np.float32(search_after[0])), int(search_after[1]))
         kernel = _shard_kernel(
             term_meta, k, mode, ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard,
-            self.use_wand, cfg.wand_min_postings, has_filter, after=after,
+            has_filter, after=after,
         )
         if has_filter:
             cands = (
@@ -534,13 +512,6 @@ class BM25Searcher:
         must_terms = analyze_query(must, cfg)
         should_terms = analyze_query(should, cfg)
         not_terms = analyze_query(must_not, cfg)
-        if must_terms and not should_terms and not not_terms:
-            # pure-must bool == match query in AND mode: take the WAND
-            # conjunction path (rarest-list seek + block skipping) instead
-            # of the dense bool scorer — rank-identical, faster on long
-            # lists (tests pin equality via the shared oracle)
-            return self.top_k(must, k=k, mode="and", doc_filter=doc_filter,
-                              with_meta=with_meta, search_after=search_after)
         if not must_terms and not should_terms:
             if not_terms:
                 # ES serves {"bool": {"must_not": ...}} as match_all minus
@@ -581,14 +552,20 @@ class BM25Searcher:
         if not must_meta and not should_meta:
             return self._empty()  # no in-vocab scoring clause at all
 
+        # one scoring entry per term, weight summed over its clauses (a
+        # term in must AND should scores once per clause, as in ES bool);
+        # every clause is a single-term group
+        summed: dict[int, tuple[float, float]] = {}
+        for tid, t_idf, w in must_meta + should_meta:
+            summed[tid] = (t_idf, summed.get(tid, (t_idf, 0.0))[1] + w)
+        term_meta = [(tid, *summed[tid]) for tid in sorted(summed)]
+        mg = [[m[0]] for m in must_meta]
+        sg = [[m[0]] for m in should_meta]
         must_tids = sorted(m[0] for m in must_meta)
-        scan_tids = sorted(
-            {m[0] for m in must_meta} | {m[0] for m in should_meta} | set(not_tids)
-        )
+        scan_tids = sorted(set(summed) | set(not_tids))
         avgdl, k1, b, dps = ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard
         docmap_lite = self._docmap_allowed(doc_filter)
         has_filter = docmap_lite is not None
-        mm, sm, nt = list(must_meta), list(should_meta), list(not_tids)
         after = None
         if search_after is not None:
             after = (float(np.float32(search_after[0])), int(search_after[1]))
@@ -608,12 +585,11 @@ class BM25Searcher:
                 allowed[right["doc_id"].to_numpy(np.int64) - base] = (
                     right["_allowed"].to_numpy(bool)
                 )
-            pick = lambda ms: [
-                (tid, t_idf, w, by_tid[tid]) for tid, t_idf, w in ms if tid in by_tid
-            ]
-            return score_shard_bool(
-                pick(mm), pick(sm), [by_tid[t] for t in nt if t in by_tid],
-                base, dps, allowed, k, min_m, avgdl, k1, b, after=after,
+            tm = [(tid, t_idf, w, by_tid[tid])
+                  for tid, t_idf, w in term_meta if tid in by_tid]
+            return score_shard_clauses(
+                tm, mg, sg, min_m, [by_tid[t] for t in not_tids if t in by_tid], [],
+                base, dps, allowed, k, avgdl, k1, b, after=after,
             )
 
         if has_filter:
@@ -905,7 +881,7 @@ class BM25Searcher:
         ]
         kernel = _shard_kernel(
             term_meta, cfg.docs_per_shard, mode, ix.avgdl, cfg.k1, cfg.b,
-            cfg.docs_per_shard, False, cfg.wand_min_postings, False,
+            cfg.docs_per_shard, False,
         )
         pruned = ix.postings.filter(
             F.col("term_id").isin([m[0] for m in term_meta])
@@ -971,8 +947,7 @@ class BM25Searcher:
                 term_meta,
                 cfg.docs_per_shard if per_q_k is None else int(per_q_k[qi]),
                 mode, ix.avgdl, cfg.k1,
-                cfg.b, cfg.docs_per_shard, False, cfg.wand_min_postings,
-                False,
+                cfg.b, cfg.docs_per_shard, False,
             )
             tids = {m[0] for m in term_meta}
             per_q.append((qi, np.array(sorted(tids), dtype=np.int64), fn))
@@ -2056,7 +2031,7 @@ class BM25Searcher:
         # k = docs_per_shard => every matching doc leaves the kernel
         kernel = _shard_kernel(
             term_meta, cfg.docs_per_shard, mode, ix.avgdl, cfg.k1, cfg.b,
-            cfg.docs_per_shard, False, cfg.wand_min_postings, False,
+            cfg.docs_per_shard, False,
         )
         pruned = ix.postings.filter(
             F.col("term_id").isin([m[0] for m in term_meta])
@@ -2821,7 +2796,7 @@ class BM25Searcher:
     ) -> DataFrame:
         """ES ``query_string`` query: Lucene classic syntax parsed
         (functions/querystring.py) and lowered onto ONE pruned postings
-        scan + the generalized bool shard kernel (score_shard_qs) — the
+        scan + the dense clause-group shard kernel (score_shard_clauses) — the
         whole mixed query runs as a single job regardless of how many
         clauses, expansions, or phrases it contains.
 
@@ -2850,8 +2825,6 @@ class BM25Searcher:
             parse_query_string,
             parse_simple_query_string,
         )
-        from ..operators.wand import score_shard_qs
-
         ix, cfg = self.ix, self.ix.cfg
         if syntax == "simple":
             parsed = parse_simple_query_string(
@@ -3034,8 +3007,8 @@ class BM25Searcher:
                  sidf, w, role, slop, ordered)
                 for slot_tids, sidf, w, role, slop, ordered in phrase_list
             ]
-            return score_shard_qs(
-                tm, mg, sg, eb, pm, base, dps, allowed, k, min_m,
+            return score_shard_clauses(
+                tm, mg, sg, min_m, eb, pm, base, dps, allowed, k,
                 avgdl, k1, b, after=after,
             )
 
@@ -4028,7 +4001,6 @@ class BM25Searcher:
             return empty
 
         avgdl, k1, b, dps = ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard
-        use_wand, wand_min = self.use_wand, cfg.wand_min_postings
 
         def kernel(left: pd.DataFrame) -> pd.DataFrame:
             if left.empty:
@@ -4056,21 +4028,13 @@ class BM25Searcher:
                 present = [m for m in metas if m[0] in by_tid]
                 if not present or (mode == "and" and len(present) < len(metas)):
                     continue
-                sizes = [int(by_tid[m[0]]["n_docs"].sum()) for m in present]
-                total = sum(sizes)
-                non_max = total - max(sizes)
-                use_daat = use_wand and total >= wand_min and (
-                    mode == "and" or (k <= 32 and non_max * 64 <= total)
-                )
-                if use_daat:
+                if mode == "or" and use_bmw(
+                    [int(by_tid[m[0]]["n_docs"].sum()) for m in present], k
+                ):
                     lists = [
                         _TermList(tid, t_idf, w, by_tid[tid]) for tid, t_idf, w in present
                     ]
-                    res = (
-                        score_shard_conjunction(lists, k, avgdl, k1, b)
-                        if mode == "and"
-                        else score_shard_bmw(lists, k, avgdl, k1, b)
-                    )
+                    res = score_shard_bmw(lists, k, avgdl, k1, b)
                 else:
                     blocks = [
                         (tid, t_idf, w, d) for tid, t_idf, w in present

@@ -1,22 +1,25 @@
-"""Direct DAAT-kernel coverage: score_shard_bmw and score_shard_conjunction
-must be rank- AND score-identical to the vectorized exact scorer on the
-same decoded blocks — including the search_after admission gate. The e2e
-suite cannot reach these kernels (its corpora sit below wand_min_postings),
-so this pins them at kernel granularity."""
+"""Direct shard-kernel coverage on a single-shard corpus (shard top-k =
+global top-k): the dense kernel equals the pandas oracle, page 1 and the
+search_after page 2, on raw and pre-decoded inputs; score_shard_bmw is
+rank- AND score-identical to it, cursor gate included. The e2e suite
+cannot reach BMW (its corpora sit below wand.BMW_MIN_POSTINGS), so this
+pins it at kernel granularity."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from bitcoin_ledger_2es_spark import build_index
+from bitcoin_ledger_2es_spark import PandasOracle, build_index
 from bitcoin_ledger_2es_spark.config import DEFAULT
 from bitcoin_ledger_2es_spark.functions.bm25 import idf as idf_fn
 from bitcoin_ledger_2es_spark.operators.wand import (
     _TermList,
+    decode_term_contrib,
     score_shard_bmw,
-    score_shard_conjunction,
     score_shard_exact,
 )
+
+from .test_end_to_end import corpus_docs_pdf
 
 CFG = DEFAULT.with_(docs_per_shard=1 << 14, block_size=32)
 
@@ -34,6 +37,11 @@ def shard_env(spark, tiny_df):
     # single-shard corpus by construction (dps >= corpus size)
     assert post["shard_id"].nunique() == 1
     return post, meta, ix.n_docs, ix.avgdl
+
+
+@pytest.fixture(scope="module")
+def oracle(tiny_pdf):
+    return PandasOracle(corpus_docs_pdf(tiny_pdf), CFG)
 
 
 def _inputs(post, meta, n_docs, query_terms, weights=None):
@@ -69,45 +77,83 @@ def test_bmw_identical_to_exact(shard_env):
         ), terms
 
 
-def test_conjunction_identical_to_exact(shard_env):
-    post, meta, n_docs, avgdl = shard_env
-    for terms, w, k in QUERIES:
-        blocks, lists = _inputs(post, meta, n_docs, terms, w)
-        exact = score_shard_exact(
-            blocks, 0, CFG.docs_per_shard, None, k, "and", avgdl, CFG.k1, CFG.b
-        )
-        conj = score_shard_conjunction(lists, k, avgdl, CFG.k1, CFG.b)
-        pd.testing.assert_frame_equal(
-            conj.reset_index(drop=True), exact.reset_index(drop=True)
-        ), terms
+def _oracle_text(terms, weights):
+    """Query text whose analyzed term counts are the clause weights."""
+    reps = [1] * len(terms) if weights is None else [int(w) for w in weights]
+    return " ".join(t for t, r in zip(terms, reps) for _ in range(r))
 
 
-def test_daat_search_after_identical(shard_env):
-    """The cursor admission gate inside BMW / conjunction must page exactly
-    like the exact scorer's dense mask — across tie boundaries."""
+def _hits(frame):
+    return frame[["doc_id", "score"]].reset_index(drop=True).astype(
+        {"doc_id": np.int64, "score": np.float32}
+    )
+
+
+def test_dense_kernel_equals_oracle_with_search_after(shard_env, oracle):
+    """On one shard, shard top-k IS global top-k: the dense kernel must
+    equal the pandas oracle for every query in both modes — page 1 and
+    the search_after page 2 cut at page 1's last hit (ties included)."""
     post, meta, n_docs, avgdl = shard_env
+    checked = 0
     for terms, w, k in QUERIES:
+        blocks, _ = _inputs(post, meta, n_docs, terms, w)
         for mode in ("or", "and"):
-            blocks, lists0 = _inputs(post, meta, n_docs, terms, w)
+            golden = _hits(oracle.top_k(_oracle_text(terms, w), k=2 * k, mode=mode))
             page1 = score_shard_exact(
                 blocks, 0, CFG.docs_per_shard, None, k, mode, avgdl, CFG.k1, CFG.b
             )
-            if page1.empty:
+            pd.testing.assert_frame_equal(_hits(page1), golden.iloc[:k].reset_index(drop=True))
+            if len(page1) < k:
                 continue
             cursor = (float(page1["score"].iloc[-1]), int(page1["doc_id"].iloc[-1]))
-            exact2 = score_shard_exact(
+            page2 = score_shard_exact(
                 blocks, 0, CFG.docs_per_shard, None, k, mode, avgdl, CFG.k1, CFG.b,
                 after=cursor,
             )
-            _, lists = _inputs(post, meta, n_docs, terms, w)  # fresh cursors
-            daat2 = (
-                score_shard_bmw(lists, k, avgdl, CFG.k1, CFG.b, after=cursor)
-                if mode == "or"
-                else score_shard_conjunction(lists, k, avgdl, CFG.k1, CFG.b, after=cursor)
-            )
-            pd.testing.assert_frame_equal(
-                daat2.reset_index(drop=True), exact2.reset_index(drop=True)
-            ), (terms, mode)
+            pd.testing.assert_frame_equal(_hits(page2), golden.iloc[k:].reset_index(drop=True))
+            checked += 1
+    assert checked >= 4  # both modes reach a second page
+
+
+def test_dense_kernel_predecoded_equals_raw(shard_env):
+    """The msearch input form — (docs, contrib) shared per term from
+    ``decode_term_contrib`` — must give the frame the raw blocks give,
+    in both modes, with and without the output sort."""
+    post, meta, n_docs, avgdl = shard_env
+    for terms, w, k in QUERIES:
+        blocks, _ = _inputs(post, meta, n_docs, terms, w)
+        pre = [
+            (tid, t_idf, wt, decode_term_contrib(g, 0, t_idf, avgdl, CFG.k1, CFG.b))
+            for tid, t_idf, wt, g in blocks
+        ]
+        for mode in ("or", "and"):
+            for kk, ordered in ((k, True), (CFG.docs_per_shard, False)):
+                raw = score_shard_exact(blocks, 0, CFG.docs_per_shard, None, kk, mode,
+                                        avgdl, CFG.k1, CFG.b, ordered=ordered)
+                dec = score_shard_exact(pre, 0, CFG.docs_per_shard, None, kk, mode,
+                                        avgdl, CFG.k1, CFG.b, ordered=ordered)
+                pd.testing.assert_frame_equal(raw, dec)
+
+
+def test_bmw_search_after_identical(shard_env):
+    """The cursor admission gate inside BMW must page exactly like the
+    dense kernel's mask — across tie boundaries."""
+    post, meta, n_docs, avgdl = shard_env
+    for terms, w, k in QUERIES:
+        blocks, _ = _inputs(post, meta, n_docs, terms, w)
+        page1 = score_shard_exact(
+            blocks, 0, CFG.docs_per_shard, None, k, "or", avgdl, CFG.k1, CFG.b
+        )
+        cursor = (float(page1["score"].iloc[-1]), int(page1["doc_id"].iloc[-1]))
+        exact2 = score_shard_exact(
+            blocks, 0, CFG.docs_per_shard, None, k, "or", avgdl, CFG.k1, CFG.b,
+            after=cursor,
+        )
+        _, lists = _inputs(post, meta, n_docs, terms, w)  # fresh cursors
+        bmw2 = score_shard_bmw(lists, k, avgdl, CFG.k1, CFG.b, after=cursor)
+        pd.testing.assert_frame_equal(
+            bmw2.reset_index(drop=True), exact2.reset_index(drop=True)
+        )
 
 
 def test_bmw_prunes_blocks(shard_env):

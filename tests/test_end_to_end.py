@@ -1,7 +1,6 @@
 """M2 gate: the engine's indexed top-k must be rank-identical — (doc_id,
 score_f32) sequences — to the brute-force pandas oracle on the full
-reference query set (FIXTURES.md §2), for both the vectorized-exact and
-the block-max-WAND scorers."""
+reference query set (FIXTURES.md §2)."""
 
 import numpy as np
 import pandas as pd
@@ -59,48 +58,45 @@ def test_batch_matches_oracle(ix, oracle, queries):
 
 
 def test_rank_identical_vs_oracle(ix, oracle, queries):
-    searcher_w = BM25Searcher(ix, use_wand=True)
-    searcher_e = BM25Searcher(ix, use_wand=False)
+    searcher = BM25Searcher(ix)
     for q in queries.itertuples(index=False):
         golden = oracle.top_k(q.query_text, k=int(q.k), mode=q.mode)
-        for s in (searcher_w, searcher_e):
-            got = (
-                s.top_k(q.query_text, k=int(q.k), mode=q.mode)
-                .select("rank", "doc_id", "score")
-                .toPandas()
-            )
-            assert got["doc_id"].tolist() == golden["doc_id"].tolist(), (
-                q.query_text, q.mode, q.k, s is searcher_w)
-            np.testing.assert_array_equal(
-                got["score"].to_numpy(np.float32), golden["score"].to_numpy(np.float32)
-            )
+        got = (
+            searcher.top_k(q.query_text, k=int(q.k), mode=q.mode)
+            .select("rank", "doc_id", "score")
+            .toPandas()
+        )
+        assert got["doc_id"].tolist() == golden["doc_id"].tolist(), (
+            q.query_text, q.mode, q.k)
+        np.testing.assert_array_equal(
+            got["score"].to_numpy(np.float32), golden["score"].to_numpy(np.float32)
+        )
 
 
 def test_search_after_pages_equal_full_ranking(ix, oracle):
     """ES search_after deep pagination: paging by (score_f32, doc_id)
-    cursor must reproduce the full ranking in consecutive slices, for both
-    the WAND and the exact scorer paths, including tie boundaries."""
+    cursor must reproduce the full ranking in consecutive slices,
+    including tie boundaries."""
     page, n_pages = 7, 5  # odd page size -> cursors can land mid-tie-group
+    s = BM25Searcher(ix)
     for q, mode in [("w0000 w0003", "or"), ("w0001", "or"), ("w0000 w0002", "and")]:
         full = oracle.top_k(q, k=page * n_pages, mode=mode)
-        for use_wand in (True, False):
-            s = BM25Searcher(ix, use_wand=use_wand)
-            got_ids, got_scores = [], []
-            cursor = None
-            for _ in range(n_pages):
-                r = s.top_k(q, k=page, mode=mode, with_meta=False,
-                            search_after=cursor).toPandas()
-                if r.empty:
-                    break
-                got_ids.extend(r["doc_id"].tolist())
-                got_scores.extend(r["score"].tolist())
-                cursor = (float(r["score"].iloc[-1]), int(r["doc_id"].iloc[-1]))
-                if len(r) < page:
-                    break
-            n = len(got_ids)
-            assert n == min(page * n_pages, len(full)), (q, mode, use_wand)
-            assert got_ids == full["doc_id"].tolist()[:n], (q, mode, use_wand)
-            np.testing.assert_array_equal(
-                np.asarray(got_scores, dtype=np.float32),
-                full["score"].to_numpy(np.float32)[:n],
-            )
+        got_ids, got_scores = [], []
+        cursor = None
+        for _ in range(n_pages):
+            r = s.top_k(q, k=page, mode=mode, with_meta=False,
+                        search_after=cursor).toPandas()
+            if r.empty:
+                break
+            got_ids.extend(r["doc_id"].tolist())
+            got_scores.extend(r["score"].tolist())
+            cursor = (float(r["score"].iloc[-1]), int(r["doc_id"].iloc[-1]))
+            if len(r) < page:
+                break
+        n = len(got_ids)
+        assert n == min(page * n_pages, len(full)), (q, mode)
+        assert got_ids == full["doc_id"].tolist()[:n], (q, mode)
+        np.testing.assert_array_equal(
+            np.asarray(got_scores, dtype=np.float32),
+            full["score"].to_numpy(np.float32)[:n],
+        )

@@ -1233,3 +1233,33 @@ def test_fork_fused_falls_back_on_non_head_branches(spark, doc_searcher,
         indexes={"ix": doc_searcher},
     ).toPandas()
     assert got["n"].tolist() and len(got) <= 2
+
+
+@pytest.mark.parametrize("prefix", [
+    " | SORT doc_id ASC | LIMIT 30",
+    " | SAMPLE 0.5",
+    ' | EVAL parts = SPLIT(conv_id, "0") | MV_EXPAND parts',
+])
+def test_fork_after_row_stage_equals_generic(spark, doc_searcher, monkeypatch,
+                                             prefix):
+    """The fused FORK lowering scores each branch over the WHOLE index, so
+    it must not engage once a stage has touched the FROM frame: LIMIT,
+    SORT, SAMPLE and MV_EXPAND leave the first WHERE open but change the
+    rows every branch sees. The result must equal the generic per-branch
+    lowering (the LIMIT case used to return 0 fused rows vs 5 generic)."""
+    import bitcoin_ledger_2es_spark.plans.esql as esql_mod
+
+    q = (
+        'FROM ix METADATA _score' + prefix +
+        ' | FORK (WHERE MATCH(text, "w0001") | SORT _score DESC, doc_id ASC'
+        ' | LIMIT 8)'
+        ' (WHERE MATCH(text, "w0005") | SORT _score DESC, doc_id ASC'
+        ' | LIMIT 8)'
+        ' | KEEP _fork, doc_id, _score'
+        ' | SORT _fork ASC, _score DESC, doc_id ASC'
+    )
+    got = esql(q, indexes={"ix": doc_searcher}).toPandas()
+    monkeypatch.setattr(esql_mod, "_fork_head_topk", lambda b: None)
+    gen = esql(q, indexes={"ix": doc_searcher}).toPandas()
+    assert len(gen) > 0
+    assert got.to_dict("list") == gen.to_dict("list")

@@ -1,7 +1,7 @@
 """ES query_string (Lucene classic syntax): parser unit tests, engine
 equivalences against the single-clause primitives it lowers to, and a
 randomized mixed-query differential against the pandas oracle
-(oracle.py query_string_topk — the lockstep twin of score_shard_qs)."""
+(oracle.py query_string_topk — the lockstep twin of score_shard_clauses)."""
 
 import numpy as np
 import pytest

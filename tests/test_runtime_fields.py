@@ -6,7 +6,8 @@ runtime_search):
 * scored search + runtime filter is EXACT vs the pandas oracle (full
   match set -> post-hoc filter, the dis_max argument), scores f32
   bit-identical to the unfiltered ranking restricted to passing docs;
-* sort on a runtime field (with doc_id tiebreak) matches the oracle;
+* sort on a runtime field (with doc_id tiebreak) matches the oracle, and
+  without k returns the whole sorted frame with no rank column;
 * k=None returns the aggregation-shaped full frame (groupBy on runtime
   fields matches pandas);
 * unscored (filter-only) search serves every live doc at score 0.0;
@@ -77,6 +78,29 @@ def test_runtime_sort(env):
         kind="mergesort",
     ).head(20)
     assert got["doc_id"].tolist() == exp["doc_id"].tolist()
+
+
+def test_runtime_sort_without_k_is_unranked(env):
+    """``sort`` with ``k=None``: the whole sorted frame, no ``rank`` column
+    (ranking the full match set would need a global single-partition
+    window)."""
+    s, tiny_df, src, oracle = env
+    got = runtime_search(
+        s, tiny_df, MAPPINGS, QUERY, mode="or",
+        sort=[("len_bucket", True), ("_score", False)],
+    ).toPandas()
+    assert got.columns.tolist() == [
+        "doc_id", "score", "conv_id", "turn_idx", *MAPPINGS
+    ]
+    full = oracle.top_k(QUERY, k=10_000, mode="or").merge(src, on="doc_id")
+    exp = full.sort_values(
+        ["len_bucket", "score", "doc_id"], ascending=[True, False, True],
+        kind="mergesort",
+    )
+    assert got["doc_id"].tolist() == exp["doc_id"].tolist()
+    np.testing.assert_array_equal(
+        got["score"].to_numpy(np.float32), exp["score"].to_numpy(np.float32)
+    )
 
 
 def test_runtime_agg_shape(env):
