@@ -31,6 +31,9 @@ Processor subset (field names mirror the ES JSON bodies)::
     {"dissect":   {"field", "pattern"}}
     {"date":      {"field", "formats": [one java-time format],
                    "target_field" (default "@timestamp")}}
+                                 (a value the format cannot parse
+                                  yields null — ES fails the
+                                  document instead)
     {"script":    {"source": <Spark SQL expression>, "target_field"}}
     {"fail":      {"message"}}   (raises at PLAN time — ES's is a
                                   per-doc runtime failure; this

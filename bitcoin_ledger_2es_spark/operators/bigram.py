@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.shard_scan import aligned_layout_ok, map_shards
 from .wand import _decode_term_blocks
 
 _POS_BITS = 21  # matches operators/phrase.py packing budget
@@ -40,15 +41,8 @@ def _shard_bigram_kernel(dps: int):
     emits partial bigram counts (t1, t2, c) and unigram collection
     frequencies as (tid, -1, cf)."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"t1": pd.Series([], dtype=np.int64),
-             "t2": pd.Series([], dtype=np.int64),
-             "c": pd.Series([], dtype=np.int64)}
-        )
-        if pdf.empty:
-            return empty
-        base = int(pdf["shard_id"].iloc[0]) * dps
+    def kernel(shard_id: int, pdf: pd.DataFrame, _) -> pd.DataFrame:
+        base = shard_id * dps
         key_parts: list[np.ndarray] = []
         tid_parts: list[np.ndarray] = []
         uni_tids: list[int] = []
@@ -136,16 +130,10 @@ def bigram_model(ix) -> BigramModel:
             "bigram_model needs a positional index: build with "
             "EngineConfig(store_positions=True)"
         )
-    from ..plans.query import _aligned_kernel, aligned_layout_ok  # lazy: cycle
-
-    dps = ix.cfg.docs_per_shard
-    kernel = _shard_bigram_kernel(dps)
-    ddl = "t1 long, t2 long, c long"
-    if aligned_layout_ok(ix):
-        # on-disk aligned layout: whole shards per input split, no exchange
-        partial = ix.postings.mapInPandas(_aligned_kernel(kernel), schema=ddl)
-    else:
-        partial = ix.postings.groupBy("shard_id").applyInPandas(kernel, schema=ddl)
+    partial = map_shards(
+        ix.postings, _shard_bigram_kernel(ix.cfg.docs_per_shard),
+        "t1 long, t2 long, c long", aligned_layout_ok(ix),
+    )
     agg = partial.groupBy("t1", "t2").agg(F.sum("c").alias("c"))
     bigrams = agg.filter(F.col("t2") >= 0).persist()
     unigrams = (

@@ -1,17 +1,18 @@
 """Index build plan (SURVEY.md §3.3): transcripts -> inverted index.
 
 Pipeline (two wide shuffles total for the heavy table, everything else is
-small or rides existing partitioning):
+small or rides existing partitioning; operators/postings.py details the
+SPIMI steps):
 
     read transcripts
       -> conversation_offsets (agg + tiny prefix-sum)          [shuffle: conv]
       -> assign_doc_ids (join + bounded window, same shuffle)
       -> (+ rollup docs)                                        [agg on conv]
       -> tokenize (Arrow pandas UDF) + doc stats
-      -> SPIMI triples groupBy(term, doc) w/ partial agg       [shuffle: term,doc]
-      -> dictionary (agg + prefix-rank)
-      -> join term_id/df back, shard by doc range
-      -> block build per shard (applyInPandas)                 [shuffle: shard]
+      -> SPIMI blocks per shard (mapInArrow)                   [shuffle: shard]
+      -> dictionary (agg over block metadata + prefix-rank)
+      -> finalize: broadcast-join term stats onto the blocks,
+         block-max bounds (mapInArrow)
       -> postings/dictionary/docmap/corpus_stats (+ lineage)
 
 All content is a pure function of the input (stable ids, fixed config), so

@@ -42,37 +42,31 @@ from ..operators.wand import (
     use_bmw,
 )
 from .build import IndexFrames
+from .shard_scan import aligned_layout_ok, allowed_mask, map_shards, presence_mask
 
 _CAND_DDL = "doc_id long, score float"
 _RESULT_DDL = "rank int, doc_id long, score float, conv_id string, turn_idx int, is_rollup boolean"
 _EMPTY_CAND = pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64), "score": pd.Series([], dtype=np.float32)})
 
 
-def _shard_kernel(term_meta, k, mode, avgdl, k1, b, dps, has_filter, after=None):
-    """Kernel over one shard's (term-pruned) postings; pandas in, pandas out.
-
-    Returns a ONE-arg function (groupBy().applyInPandas passes (key, pdf)
-    to two-arg functions, so arity must be exact). Use
-    ``_cogroup_kernel`` for the filtered variant (postings cogrouped with
-    the shard's docmap slice for the allowed-mask).
-    """
+def _shard_kernel(term_meta, k, mode, avgdl, k1, b, dps, after=None):
+    """Kernel over one shard's (term-pruned) postings; pandas in, pandas
+    out, in the ``map_shards`` signature. With a docmap slice (the
+    filtered lowering) its ``_allowed`` column masks docs before the
+    shard-local cap."""
     tm = sorted(term_meta, key=lambda m: m[0])  # [(term_id, idf, weight)]
     n_query_terms = len(tm)
 
-    def _run(left: pd.DataFrame, right: pd.DataFrame | None = None) -> pd.DataFrame:
+    def fn(shard_id: int, left: pd.DataFrame, right: pd.DataFrame | None) -> pd.DataFrame:
         if left.empty:
             return _EMPTY_CAND
         present = set(left["term_id"].unique().tolist())
         if mode == "and" and len(present) < n_query_terms:
             return _EMPTY_CAND
-        base = int(left["shard_id"].iloc[0]) * dps
-
-        allowed = None
-        if has_filter:
-            if right is None or right.empty:
-                return _EMPTY_CAND
-            allowed = np.zeros(dps, dtype=bool)
-            allowed[right["doc_id"].to_numpy(np.int64) - base] = right["_allowed"].to_numpy(bool)
+        if right is not None and right.empty:
+            return _EMPTY_CAND
+        base = shard_id * dps
+        allowed = allowed_mask(right, shard_id, dps)
 
         # scorer selection (both exact, rank-identical — tests pin it):
         # BMW only where its block skipping pays (wand.use_bmw), the
@@ -100,77 +94,6 @@ def _shard_kernel(term_meta, k, mode, avgdl, k1, b, dps, has_filter, after=None)
         return score_shard_exact(blocks, base, dps, allowed, k, mode, avgdl, k1, b,
                                  after=after, ordered=False)
 
-    if has_filter:
-        def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:  # cogroup
-            return _run(left, right)
-    else:
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:  # grouped map
-            return _run(pdf, None)
-
-    return fn
-
-
-def _parse_byte_size(v: str) -> int:
-    """Parse a Spark byte-size conf value ('134217728b', '128m', '1g')."""
-    s = str(v).strip().lower()
-    mult = 1
-    for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30), ("tb", 1 << 40),
-                   ("b", 1), ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40)):
-        if s.endswith(suf):
-            s, mult = s[: -len(suf)], m
-            break
-    return int(float(s)) * mult
-
-
-def aligned_layout_ok(ix) -> bool:
-    """True iff the zero-exchange (aligned) scan is provably safe for this
-    index: it is on disk in the write_index layout AND every postings file
-    is <= spark.sql.files.maxPartitionBytes. Spark splits parquet files
-    LARGER than that at row-group boundaries, so an over-sized shard file
-    would be scored by several mapInPandas tasks each seeing only part of
-    the shard's postings — silently understated scores. Files at or below
-    the threshold are never split (bin-packing only merges whole files)."""
-    from pathlib import Path
-
-    if ix.path is None:
-        return False
-    pdir = Path(ix.path) / "postings"
-    try:
-        if not pdir.is_dir():
-            return False  # non-local FS: can't cheaply verify -> grouped path
-        files = [f for f in pdir.glob("shard_id=*/*.parquet")]
-        if not files:
-            return False
-        max_file = max(f.stat().st_size for f in files)
-    except OSError:
-        return False
-    spark = ix.postings.sparkSession
-    cap = _parse_byte_size(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    )
-    return max_file <= cap
-
-
-def _aligned_kernel(shard_fn):
-    """Wrap a per-shard kernel for the partition-aligned (zero-exchange)
-    scan: one mapInPandas task sees whole shards (possibly several —
-    Spark bin-packs small per-shard files into one input split), groups
-    them in pandas, and runs the shard kernel on each. Correct because the
-    on-disk layout (write_index) stores each shard's postings in exactly
-    one file under its shard_id= directory, and a parquet file is never
-    split below spark.sql.files.maxPartitionBytes (``aligned_layout_ok``
-    verifies both preconditions at searcher construction)."""
-
-    def fn(batches):
-        parts = list(batches)
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        for _, g in pdf.groupby("shard_id", sort=False):
-            out = shard_fn(g.reset_index(drop=True))
-            if len(out):
-                yield out
-
     return fn
 
 
@@ -196,8 +119,7 @@ def _fold_tagged_scores(subs: "list[DataFrame]") -> DataFrame:
 
 class BM25Searcher:
     def __init__(
-        self, ix: IndexFrames, aligned: bool | None = None,
-        default_doc_filter: Column | None = None,
+        self, ix: IndexFrames, default_doc_filter: Column | None = None,
     ):
         """``default_doc_filter``: a non-scoring docmap predicate applied
         to EVERY query through this searcher (the ES filtered-alias
@@ -208,35 +130,18 @@ class BM25Searcher:
         shard-capped phrase/span family raises rather than silently
         ignoring it (same honesty contract as pending deletes).
 
-        ``aligned``: score shards inside the pruned postings SCAN itself
-        — mapInPandas over the partition-aligned on-disk layout — instead
-        of groupBy + applyInPandas, removing the only wide exchange on the
-        query path. Results are identical either way (tests pin this).
-
-        * ``None`` (default): auto — use the aligned path iff the index is
-          on disk in the write_index layout and every postings file fits in
-          one input split (``aligned_layout_ok``); otherwise the grouped
-          path. On-disk indexes therefore get the zero-exchange plan by
-          default, in-memory ones stay on groupBy.
-        * ``True``: require it — raises if the precondition fails (a shard
-          file larger than spark.sql.files.maxPartitionBytes would be
-          SPLIT across tasks and scored partially — silent wrong results).
-        * ``False``: always the grouped path."""
+        Every surface scores shards through ONE dispatch
+        (``shard_scan.map_shards``) whose lowering follows the index
+        layout, not an option: an on-disk write_index layout whose
+        postings files all fit one input split (``aligned_layout_ok``)
+        scores inside the pruned postings scan (zero exchanges); any
+        other index — in-memory, or with files above
+        spark.sql.files.maxPartitionBytes — groups the postings by shard
+        (one exchange); a filter cogroups the docmap. Results are
+        identical across the lowerings (tests pin this). ``aligned``
+        reports the choice, made once here."""
         self.ix = ix
-        if aligned is None:
-            self.aligned = aligned_layout_ok(ix)
-        elif aligned:
-            if not aligned_layout_ok(ix):
-                raise ValueError(
-                    "aligned=True requires an on-disk write_index layout whose "
-                    "largest postings file fits spark.sql.files.maxPartitionBytes "
-                    "(larger files get split across scan tasks -> partial shard "
-                    "scores). Raise maxPartitionBytes, rewrite the index with a "
-                    "smaller docs_per_shard, or use aligned=None/False."
-                )
-            self.aligned = True
-        else:
-            self.aligned = False
+        self._aligned = aligned_layout_ok(ix)
         self._spark = ix.docmap.sparkSession
         # driver-side term lookup memo (term -> (term_id, df) or None):
         # the dictionary is immutable for an index, so repeated queries
@@ -251,15 +156,20 @@ class BM25Searcher:
         self._n_deleted = 0
         self._default_filter = default_doc_filter
 
-    def _docmap_allowed(self, doc_filter: Column | None) -> DataFrame | None:
-        """docmap with the ``_allowed`` mask column for the cogroup
-        filter path: the user's ``doc_filter`` AND not-tombstoned (pending
-        ``delete_by_query`` docs). Returns None when neither applies, so
-        callers keep the unfiltered fast path. The kernels treat docmap
-        rows absent from the mask as excluded, so the left join below
-        (which keeps every live row) composes correctly."""
-        if doc_filter is None and self._deletes is None and self._default_filter is None:
-            return None
+    @property
+    def aligned(self) -> bool:
+        """True when shards are scored inside the postings scan (the
+        zero-exchange lowering) — derived from the layout, read-only."""
+        return self._aligned
+
+    def _docmap_allowed(
+        self, doc_filter: Column | None, cols=("shard_id", "doc_id"),
+    ) -> DataFrame:
+        """docmap ``cols`` plus the ``_allowed`` mask column: the user's
+        ``doc_filter`` AND the alias filter AND not-tombstoned (pending
+        ``delete_by_query`` docs); all-true when none applies. The kernels
+        treat docmap rows absent from the mask as excluded, so the left
+        join below (which keeps every live row) composes correctly."""
         dm = self.ix.docmap
         allowed = doc_filter if doc_filter is not None else F.lit(True)
         if self._default_filter is not None:
@@ -269,9 +179,14 @@ class BM25Searcher:
                 self._deletes.withColumn("_tomb", F.lit(True)), "doc_id", "left"
             )
             allowed = allowed & F.col("_tomb").isNull()
-        return dm.withColumn("_allowed", allowed).select(
-            "shard_id", "doc_id", "_allowed"
-        )
+        return dm.withColumn("_allowed", allowed).select(*cols, "_allowed")
+
+    def _filter_docmap(self, doc_filter: Column | None) -> DataFrame | None:
+        """The allowed-mask docmap for the scored surfaces, or None when
+        nothing filters (they keep the unfiltered lowering)."""
+        if doc_filter is None and self._deletes is None and self._default_filter is None:
+            return None
+        return self._docmap_allowed(doc_filter)
 
     def _apply_deletes(self, cands: DataFrame) -> DataFrame:
         """Anti-join pending tombstones out of a FULL-match-set candidate
@@ -456,30 +371,17 @@ class BM25Searcher:
         ]
         term_ids = [m[0] for m in term_meta]
 
-        cand_postings = ix.postings.filter(F.col("term_id").isin(term_ids))
-        docmap_lite = self._docmap_allowed(doc_filter)
-        has_filter = docmap_lite is not None
-
         after = None
         if search_after is not None:
             after = (float(np.float32(search_after[0])), int(search_after[1]))
         kernel = _shard_kernel(
             term_meta, k, mode, ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard,
-            has_filter, after=after,
+            after=after,
         )
-        if has_filter:
-            cands = (
-                cand_postings.groupBy("shard_id")
-                .cogroup(docmap_lite.groupBy("shard_id"))
-                .applyInPandas(kernel, schema=_CAND_DDL)
-            )
-        elif self.aligned:
-            # zero-exchange path: shards are whole within input splits, so
-            # the kernel runs inside the scan stage itself
-            cands = cand_postings.mapInPandas(_aligned_kernel(kernel), schema=_CAND_DDL)
-        else:
-            cands = cand_postings.groupBy("shard_id").applyInPandas(kernel, schema=_CAND_DDL)
-
+        cands = map_shards(
+            ix.postings.filter(F.col("term_id").isin(term_ids)), kernel,
+            _CAND_DDL, self._aligned, self._filter_docmap(doc_filter),
+        )
         if min_score is not None:
             cands = cands.filter(
                 F.col("score") >= float(np.float32(min_score)))
@@ -564,53 +466,28 @@ class BM25Searcher:
         must_tids = sorted(m[0] for m in must_meta)
         scan_tids = sorted(set(summed) | set(not_tids))
         avgdl, k1, b, dps = ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard
-        docmap_lite = self._docmap_allowed(doc_filter)
-        has_filter = docmap_lite is not None
         after = None
         if search_after is not None:
             after = (float(np.float32(search_after[0])), int(search_after[1]))
 
-        def _run(left: pd.DataFrame, right: pd.DataFrame | None) -> pd.DataFrame:
-            if left.empty:
+        def kernel(shard_id: int, left: pd.DataFrame, right: pd.DataFrame | None) -> pd.DataFrame:
+            if left.empty or (right is not None and right.empty):
                 return _EMPTY_CAND
             by_tid = {tid: g for tid, g in left.groupby("term_id")}
             if any(tid not in by_tid for tid in must_tids):
                 return _EMPTY_CAND  # this shard lacks a required term
-            base = int(left["shard_id"].iloc[0]) * dps
-            allowed = None
-            if has_filter:
-                if right is None or right.empty:
-                    return _EMPTY_CAND
-                allowed = np.zeros(dps, dtype=bool)
-                allowed[right["doc_id"].to_numpy(np.int64) - base] = (
-                    right["_allowed"].to_numpy(bool)
-                )
             tm = [(tid, t_idf, w, by_tid[tid])
                   for tid, t_idf, w in term_meta if tid in by_tid]
             return score_shard_clauses(
                 tm, mg, sg, min_m, [by_tid[t] for t in not_tids if t in by_tid], [],
-                base, dps, allowed, k, avgdl, k1, b, after=after,
+                shard_id * dps, dps, allowed_mask(right, shard_id, dps), k, avgdl, k1, b,
+                after=after,
             )
 
-        if has_filter:
-            def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-                return _run(left, right)
-        else:
-            def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-                return _run(pdf, None)
-
-        cand_postings = ix.postings.filter(F.col("term_id").isin(scan_tids))
-        if has_filter:
-            cands = (
-                cand_postings.groupBy("shard_id")
-                .cogroup(docmap_lite.groupBy("shard_id"))
-                .applyInPandas(kernel, schema=_CAND_DDL)
-            )
-        elif self.aligned:
-            cands = cand_postings.mapInPandas(_aligned_kernel(kernel), schema=_CAND_DDL)
-        else:
-            cands = cand_postings.groupBy("shard_id").applyInPandas(kernel, schema=_CAND_DDL)
-
+        cands = map_shards(
+            ix.postings.filter(F.col("term_id").isin(scan_tids)), kernel,
+            _CAND_DDL, self._aligned, self._filter_docmap(doc_filter),
+        )
         return self._ranked(cands, k, with_meta)
 
     def match_all(
@@ -687,50 +564,19 @@ class BM25Searcher:
         not_tids = set(found[t][0] for t in not_terms if t in found)
         scan_tids = sorted(set(req_tids) | not_tids)
         dps, b32 = cfg.docs_per_shard, float(np.float32(boost))
-        req_set, n_req = set(req_tids), len(req_tids)
         after = None
         if search_after is not None:
             after = (float(np.float32(search_after[0])), int(search_after[1]))
 
-        def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        def kernel(shard_id: int, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             if right.empty:
                 return _EMPTY_CAND
             if after is not None and np.float32(b32) > np.float32(after[0]):
                 return _EMPTY_CAND  # cursor score below the constant score
-            base = int(right["shard_id"].iloc[0]) * dps
-            allowed = np.zeros(dps, dtype=bool)
-            allowed[right["doc_id"].to_numpy(np.int64) - base] = (
-                right["_allowed"].to_numpy(bool)
-            )
-            groups = (
-                {tid: g for tid, g in left.groupby("term_id")}
-                if not left.empty
-                else {}
-            )
-            if n_req:
-                seen = np.zeros(dps, dtype=np.int32)
-                n_present = 0
-                for tid in req_tids:
-                    g = groups.get(tid)
-                    if g is None:
-                        continue
-                    dec = _decode_term_blocks(g, base)
-                    if dec is None:
-                        continue
-                    seen[dec[0]] += 1
-                    n_present += 1
-                if mode == "and":
-                    if n_present < n_req:
-                        return _EMPTY_CAND  # shard lacks a required term
-                    allowed &= seen == n_req
-                else:
-                    allowed &= seen > 0
-            for tid in not_tids:
-                g = groups.get(tid)
-                if g is not None:
-                    dec = _decode_term_blocks(g, base)
-                    if dec is not None:
-                        allowed[dec[0]] = False
+            base = shard_id * dps
+            allowed = allowed_mask(right, shard_id, dps)
+            if not presence_mask(allowed, left, req_tids, not_tids, mode, base):
+                return _EMPTY_CAND  # shard lacks a required term
             ids = np.flatnonzero(allowed).astype(np.int64) + base
             if after is not None and np.float32(b32) == np.float32(after[0]):
                 ids = ids[ids > after[1]]
@@ -741,19 +587,11 @@ class BM25Searcher:
 
         # the docmap slice is always needed here (it IS the live set);
         # _docmap_allowed folds pending delete_by_query tombstones in
-        docmap_lite = self._docmap_allowed(doc_filter)
-        if docmap_lite is None:
-            docmap_lite = ix.docmap.withColumn("_allowed", F.lit(True)).select(
-                "shard_id", "doc_id", "_allowed"
-            )
         pruned = ix.postings.filter(
             F.col("term_id").isin(scan_tids) if scan_tids else F.lit(False)
         )
-        cands = (
-            pruned.groupBy("shard_id")
-            .cogroup(docmap_lite.groupBy("shard_id"))
-            .applyInPandas(kernel, schema=_CAND_DDL)
-        )
+        cands = map_shards(pruned, kernel, _CAND_DDL, self._aligned,
+                           self._docmap_allowed(doc_filter))
         return self._ranked(cands, k, with_meta)
 
     def more_like_this(
@@ -881,15 +719,12 @@ class BM25Searcher:
         ]
         kernel = _shard_kernel(
             term_meta, cfg.docs_per_shard, mode, ix.avgdl, cfg.k1, cfg.b,
-            cfg.docs_per_shard, False,
+            cfg.docs_per_shard,
         )
         pruned = ix.postings.filter(
             F.col("term_id").isin([m[0] for m in term_meta])
         )
-        if self.aligned:
-            out = pruned.mapInPandas(_aligned_kernel(kernel), schema=_CAND_DDL)
-        else:
-            out = pruned.groupBy("shard_id").applyInPandas(kernel, schema=_CAND_DDL)
+        out = map_shards(pruned, kernel, _CAND_DDL, self._aligned)
         # FULL match set (no selection edge) -> post-hoc tombstone
         # exclusion is exact; covers every compound surface built on this
         return self._apply_deletes(out)
@@ -946,8 +781,7 @@ class BM25Searcher:
             fn = _shard_kernel(
                 term_meta,
                 cfg.docs_per_shard if per_q_k is None else int(per_q_k[qi]),
-                mode, ix.avgdl, cfg.k1,
-                cfg.b, cfg.docs_per_shard, False,
+                mode, ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard,
             )
             tids = {m[0] for m in term_meta}
             per_q.append((qi, np.array(sorted(tids), dtype=np.int64), fn))
@@ -961,11 +795,11 @@ class BM25Searcher:
             "score": pd.Series([], dtype=np.float32),
         })
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(shard_id: int, pdf: pd.DataFrame, _) -> pd.DataFrame:
             outs = []
             for qi, tids, fn in per_q:
                 sub = pdf[pdf["term_id"].isin(tids)]
-                out = fn(sub.reset_index(drop=True))
+                out = fn(shard_id, sub.reset_index(drop=True), None)
                 if len(out):
                     out = out.copy()
                     out["q"] = np.int32(qi)
@@ -973,11 +807,7 @@ class BM25Searcher:
             return pd.concat(outs) if outs else _empty_multi
 
         pruned = ix.postings.filter(F.col("term_id").isin(sorted(all_tids)))
-        schema = "doc_id long, q int, score float"
-        if self.aligned:
-            out = pruned.mapInPandas(_aligned_kernel(kernel), schema=schema)
-        else:
-            out = pruned.groupBy("shard_id").applyInPandas(kernel, schema=schema)
+        out = map_shards(pruned, kernel, "doc_id long, q int, score float", self._aligned)
         return self._apply_deletes(out), {qi for qi, _, _ in per_q}
 
     def _match_set(self, term_ids: list[int]) -> DataFrame | None:
@@ -992,11 +822,8 @@ class BM25Searcher:
         ix = self.ix
         dps = ix.cfg.docs_per_shard
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64)})
-            if pdf.empty:
-                return empty
-            base = int(pdf["shard_id"].iloc[0]) * dps
+        def kernel(shard_id: int, pdf: pd.DataFrame, _) -> pd.DataFrame:
+            base = shard_id * dps
             seen = np.zeros(dps, dtype=bool)
             for _, g in pdf.groupby("term_id"):
                 dec = _decode_term_blocks(g, base)
@@ -1007,10 +834,7 @@ class BM25Searcher:
             )
 
         pruned = ix.postings.filter(F.col("term_id").isin(list(term_ids)))
-        if self.aligned:
-            out = pruned.mapInPandas(_aligned_kernel(kernel), schema="doc_id long")
-        else:
-            out = pruned.groupBy("shard_id").applyInPandas(kernel, schema="doc_id long")
+        out = map_shards(pruned, kernel, "doc_id long", self._aligned)
         return self._apply_deletes(out)  # full set: post-hoc exclusion exact
 
     def field_caps(self) -> DataFrame:
@@ -1078,15 +902,13 @@ class BM25Searcher:
         ix = self.ix
         dps = ix.cfg.docs_per_shard
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(shard_id: int, pdf: pd.DataFrame, _) -> pd.DataFrame:
             empty = pd.DataFrame({
                 "doc_id": pd.Series([], dtype=np.int64),
                 "term_id": pd.Series([], dtype=np.int64),
                 "tf": pd.Series([], dtype=np.int64),
             })
-            if pdf.empty:
-                return empty
-            base = int(pdf["shard_id"].iloc[0]) * dps
+            base = shard_id * dps
             outs = []
             for tid, g in pdf.groupby("term_id"):
                 dec = _decode_term_blocks(g, base)
@@ -1101,11 +923,7 @@ class BM25Searcher:
             return pd.concat(outs) if outs else empty
 
         pruned = ix.postings.filter(F.col("term_id").isin(tids))
-        schema = "doc_id long, term_id long, tf long"
-        if self.aligned:
-            out = pruned.mapInPandas(_aligned_kernel(kernel), schema=schema)
-        else:
-            out = pruned.groupBy("shard_id").applyInPandas(kernel, schema=schema)
+        out = map_shards(pruned, kernel, "doc_id long, term_id long, tf long", self._aligned)
         return self._apply_deletes(out)
 
     def match_bool_prefix(
@@ -1395,10 +1213,8 @@ class BM25Searcher:
         avgdl, k1, b, dps = ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard
         n_groups, and_mode = len(groups), mode == "and"
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return _EMPTY_CAND
-            base = int(pdf["shard_id"].iloc[0]) * dps
+        def kernel(shard_id: int, pdf: pd.DataFrame, _) -> pd.DataFrame:
+            base = shard_id * dps
             by_tid = {tid: g for tid, g in pdf.groupby("term_id")}
             score = np.zeros(dps, dtype=np.float64)
             seen = np.zeros(dps, dtype=np.int32)
@@ -1445,10 +1261,7 @@ class BM25Searcher:
 
         scan_tids = sorted({t for _, _, tids in groups for t in tids})
         pruned = ix.postings.filter(F.col("term_id").isin(scan_tids))
-        if self.aligned:
-            cands = pruned.mapInPandas(_aligned_kernel(kernel), schema=_CAND_DDL)
-        else:
-            cands = pruned.groupBy("shard_id").applyInPandas(kernel, schema=_CAND_DDL)
+        cands = map_shards(pruned, kernel, _CAND_DDL, self._aligned)
         return self._ranked(cands, k, with_meta)
 
     def match_fuzzy(
@@ -1954,10 +1767,8 @@ class BM25Searcher:
         avgdl, k1, b, dps = ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard
         end_i = int(end)
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return _EMPTY_CAND
-            base = int(pdf["shard_id"].iloc[0]) * dps
+        def kernel(shard_id: int, pdf: pd.DataFrame, _) -> pd.DataFrame:
+            base = shard_id * dps
             keys, dl_docs, dl_vals = _slot_keys(pdf, 0, 1, base)
             pos = (keys & np.int64((1 << _POS_BITS) - 1)) - 1
             doc = (keys >> np.int64(_POS_BITS)).astype(np.int64)
@@ -1983,10 +1794,7 @@ class BM25Searcher:
             )
 
         pruned = ix.postings.filter(F.col("term_id") == tid)
-        if self.aligned:
-            cands = pruned.mapInPandas(_aligned_kernel(kernel), schema=_CAND_DDL)
-        else:
-            cands = pruned.groupBy("shard_id").applyInPandas(kernel, schema=_CAND_DDL)
+        cands = map_shards(pruned, kernel, _CAND_DDL, self._aligned)
         return self._ranked(cands, k, with_meta)
 
     def conversations_topk(
@@ -2012,36 +1820,12 @@ class BM25Searcher:
         the ES equivalent pays the same join-field fan-in."""
         if score_mode not in ("max", "sum", "avg", "none"):
             raise ValueError("score_mode: max | sum | avg | none")
-        ix, cfg = self.ix, self.ix.cfg
-        terms = analyze_query(query_text, cfg)
-        if not terms:
+        # every matching doc, tombstones excluded before the conv rollup
+        cands = self._all_match_scores(query_text, mode)
+        if cands is None:
             return self._spark.createDataFrame(
                 [], "rank int, conv_id string, score float, n_matching long"
             )
-        weights = Counter(terms)
-        found = self._lookup_terms(list(weights))
-        if (mode == "and" and len(found) < len(weights)) or not found:
-            return self._spark.createDataFrame(
-                [], "rank int, conv_id string, score float, n_matching long"
-            )
-        term_meta = [
-            (tid, float(idf_fn(float(df_), ix.n_docs)), float(weights[t]))
-            for t, (tid, df_) in found.items()
-        ]
-        # k = docs_per_shard => every matching doc leaves the kernel
-        kernel = _shard_kernel(
-            term_meta, cfg.docs_per_shard, mode, ix.avgdl, cfg.k1, cfg.b,
-            cfg.docs_per_shard, False,
-        )
-        pruned = ix.postings.filter(
-            F.col("term_id").isin([m[0] for m in term_meta])
-        )
-        if self.aligned:
-            cands = pruned.mapInPandas(_aligned_kernel(kernel), schema=_CAND_DDL)
-        else:
-            cands = pruned.groupBy("shard_id").applyInPandas(kernel, schema=_CAND_DDL)
-        # full match set -> tombstone exclusion before the conv rollup
-        cands = self._apply_deletes(cands)
         children = (
             self.ix.docmap.select("doc_id", "conv_id", "is_rollup")
             .join(cands, "doc_id", "inner")
@@ -2394,91 +2178,33 @@ class BM25Searcher:
         out_cols = ["doc_id", "conv_id", "turn_idx", "doc_len", "is_rollup"]
         found = self._lookup_terms(sorted(set(req_terms) | set(not_terms)))
         req_tids = sorted(found[t][0] for t in req_terms if t in found)
-        empty = self._spark.createDataFrame(
-            [], "doc_id long, conv_id string, turn_idx int, doc_len long, "
-                "is_rollup boolean"
-        )
+        ddl = "doc_id long, conv_id string, turn_idx int, doc_len long, is_rollup boolean"
         if mode == "and" and len(req_tids) < len(req_terms):
-            return empty
+            return self._spark.createDataFrame([], ddl)
         if mode == "or" and req_terms and not req_tids:
-            return empty
+            return self._spark.createDataFrame([], ddl)
         not_tids = set(found[t][0] for t in not_terms if t in found)
         scan_tids = sorted(set(req_tids) | not_tids)
         dps = cfg.docs_per_shard
-        req_list, n_req = list(req_tids), len(req_tids)
-        # pending delete_by_query tombstones AND the alias-level
-        # default_doc_filter ride the same _allowed mask — ES applies
-        # alias filters to _count and filter-context matches alike
-        has_filter = (
-            doc_filter is not None
-            or self._deletes is not None
-            or self._default_filter is not None
-        )
 
-        def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        def kernel(shard_id: int, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             out = right[out_cols]
             if right.empty:
                 return out
-            base = int(right["shard_id"].iloc[0]) * dps
-            allowed = np.zeros(dps, dtype=bool)
-            allowed[right["doc_id"].to_numpy(np.int64) - base] = (
-                right["_allowed"].to_numpy(bool) if has_filter else True
-            )
-            groups = (
-                {tid: g for tid, g in left.groupby("term_id")}
-                if not left.empty else {}
-            )
-            if n_req:
-                seen = np.zeros(dps, dtype=np.int32)
-                n_present = 0
-                for tid in req_list:
-                    g = groups.get(tid)
-                    if g is None:
-                        continue
-                    dec = _decode_term_blocks(g, base)
-                    if dec is None:
-                        continue
-                    seen[dec[0]] += 1
-                    n_present += 1
-                if mode == "and":
-                    if n_present < n_req:
-                        return out.iloc[0:0]
-                    allowed &= seen == n_req
-                else:
-                    allowed &= seen > 0
-            for tid in not_tids:
-                g = groups.get(tid)
-                if g is not None:
-                    dec = _decode_term_blocks(g, base)
-                    if dec is not None:
-                        allowed[dec[0]] = False
-            keep = allowed[right["doc_id"].to_numpy(np.int64) - base]
-            return out[keep]
+            base = shard_id * dps
+            allowed = allowed_mask(right, shard_id, dps)
+            if not presence_mask(allowed, left, req_tids, not_tids, mode, base):
+                return out.iloc[0:0]
+            return out[allowed[right["doc_id"].to_numpy(np.int64) - base]]
 
-        dm = ix.docmap
-        allowed_expr = doc_filter if doc_filter is not None else F.lit(True)
-        if self._default_filter is not None:
-            allowed_expr = allowed_expr & self._default_filter
-        if self._deletes is not None:
-            dm = dm.join(
-                self._deletes.withColumn("_tomb", F.lit(True)), "doc_id", "left"
-            )
-            allowed_expr = allowed_expr & F.col("_tomb").isNull()
-        docmap_lite = dm.withColumn("_allowed", allowed_expr).select(
-            "shard_id", "_allowed", *out_cols
-        )
+        # pending delete_by_query tombstones AND the alias-level
+        # default_doc_filter ride the same _allowed mask — ES applies
+        # alias filters to _count and filter-context matches alike
         pruned = ix.postings.filter(
             F.col("term_id").isin(scan_tids) if scan_tids else F.lit(False)
         )
-        return (
-            pruned.groupBy("shard_id")
-            .cogroup(docmap_lite.groupBy("shard_id"))
-            .applyInPandas(
-                kernel,
-                schema="doc_id long, conv_id string, turn_idx int, "
-                       "doc_len long, is_rollup boolean",
-            )
-        )
+        return map_shards(pruned, kernel, ddl, self._aligned,
+                          self._docmap_allowed(doc_filter, ["shard_id", *out_cols]))
 
     def term_query(self, term: str, k: int = 10) -> DataFrame:
         """ES term-query analogue (B2): single exact term, BM25-ranked."""
@@ -2978,26 +2704,15 @@ class BM25Searcher:
             | {tid for p in phrase_list for tid in p[0]}
         )
         avgdl, k1, b, dps = ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard
-        docmap_lite = self._docmap_allowed(flt)
-        has_filter = docmap_lite is not None
         after = None
         if search_after is not None:
             after = (float(np.float32(search_after[0])), int(search_after[1]))
         mg, sg = list(must_groups), list(should_groups)
 
-        def _run(left: pd.DataFrame, right: pd.DataFrame | None) -> pd.DataFrame:
-            if left.empty:
+        def kernel(shard_id: int, left: pd.DataFrame, right: pd.DataFrame | None) -> pd.DataFrame:
+            if left.empty or (right is not None and right.empty):
                 return _EMPTY_CAND
             by_tid = {tid: g for tid, g in left.groupby("term_id")}
-            base = int(left["shard_id"].iloc[0]) * dps
-            allowed = None
-            if has_filter:
-                if right is None or right.empty:
-                    return _EMPTY_CAND
-                allowed = np.zeros(dps, dtype=bool)
-                allowed[right["doc_id"].to_numpy(np.int64) - base] = (
-                    right["_allowed"].to_numpy(bool)
-                )
             no_blocks = left.iloc[0:0]
             tm = [(tid, t_idf, w, by_tid[tid])
                   for tid, t_idf, w in term_meta if tid in by_tid]
@@ -3008,29 +2723,14 @@ class BM25Searcher:
                 for slot_tids, sidf, w, role, slop, ordered in phrase_list
             ]
             return score_shard_clauses(
-                tm, mg, sg, min_m, eb, pm, base, dps, allowed, k,
-                avgdl, k1, b, after=after,
+                tm, mg, sg, min_m, eb, pm, shard_id * dps, dps,
+                allowed_mask(right, shard_id, dps), k, avgdl, k1, b, after=after,
             )
 
-        if has_filter:
-            def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-                return _run(left, right)
-        else:
-            def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-                return _run(pdf, None)
-
-        cand_postings = ix.postings.filter(F.col("term_id").isin(scan_tids))
-        if has_filter:
-            cands = (
-                cand_postings.groupBy("shard_id")
-                .cogroup(docmap_lite.groupBy("shard_id"))
-                .applyInPandas(kernel, schema=_CAND_DDL)
-            )
-        elif self.aligned:
-            cands = cand_postings.mapInPandas(_aligned_kernel(kernel), schema=_CAND_DDL)
-        else:
-            cands = cand_postings.groupBy("shard_id").applyInPandas(kernel, schema=_CAND_DDL)
-
+        cands = map_shards(
+            ix.postings.filter(F.col("term_id").isin(scan_tids)), kernel,
+            _CAND_DDL, self._aligned, self._filter_docmap(flt),
+        )
         return self._ranked(cands, k, with_meta)
 
     def validate_query(
@@ -3457,10 +3157,8 @@ class BM25Searcher:
         need = sorted(need_set)
         avgdl, k1, b, dps = ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return _EMPTY_CAND
-            base = int(pdf["shard_id"].iloc[0]) * dps
+        def kernel(shard_id: int, pdf: pd.DataFrame, _) -> pd.DataFrame:
+            base = shard_id * dps
             by_tid = {tid: g for tid, g in pdf.groupby("term_id")}
             points, dl_pairs = decode_term_points(by_tid, need, base)
             ivl = eval_resolved(root, points)
@@ -3471,10 +3169,7 @@ class BM25Searcher:
             )
 
         pruned = ix.postings.filter(F.col("term_id").isin(need))
-        if self.aligned:
-            cands = pruned.mapInPandas(_aligned_kernel(kernel), schema=_CAND_DDL)
-        else:
-            cands = pruned.groupBy("shard_id").applyInPandas(kernel, schema=_CAND_DDL)
+        cands = map_shards(pruned, kernel, _CAND_DDL, self._aligned)
         return self._ranked(cands, k, with_meta)
 
     def span_or_query(
@@ -3620,10 +3315,8 @@ class BM25Searcher:
         avgdl, k1, b, dps = ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard
         slop_i, pre_i, post_i = int(slop), int(pre), int(post)
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return _EMPTY_CAND
-            base = int(pdf["shard_id"].iloc[0]) * dps
+        def kernel(shard_id: int, pdf: pd.DataFrame, _) -> pd.DataFrame:
+            base = shard_id * dps
             by_tid = {tid: g for tid, g in pdf.groupby("term_id")}
 
             def extract(tids):
@@ -3654,10 +3347,7 @@ class BM25Searcher:
             )
 
         pruned = ix.postings.filter(F.col("term_id").isin(need))
-        if self.aligned:
-            cands = pruned.mapInPandas(_aligned_kernel(kernel), schema=_CAND_DDL)
-        else:
-            cands = pruned.groupBy("shard_id").applyInPandas(kernel, schema=_CAND_DDL)
+        cands = map_shards(pruned, kernel, _CAND_DDL, self._aligned)
         return self._ranked(cands, k, with_meta)
 
     def phrase_query(
@@ -3717,19 +3407,17 @@ class BM25Searcher:
         uniq_tids = sorted(set(slot_tids))
         avgdl, k1, b, dps = ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(shard_id: int, pdf: pd.DataFrame, _) -> pd.DataFrame:
             empty = pd.DataFrame(
                 {"doc_id": pd.Series([], dtype=np.int64),
                  "score": pd.Series([], dtype=np.float32),
                  "phrase_freq": pd.Series(
                      [], dtype=np.float64 if unordered else np.int64)}
             )
-            if pdf.empty:
-                return empty
             by_tid = {tid: g for tid, g in pdf.groupby("term_id")}
             if any(tid not in by_tid for tid in slot_tids):
                 return empty  # this shard lacks a phrase term entirely
-            base = int(pdf["shard_id"].iloc[0]) * dps
+            base = shard_id * dps
             slots = [by_tid[tid] for tid in slot_tids]
             if unordered:
                 return score_shard_phrase_unordered(
@@ -3741,10 +3429,7 @@ class BM25Searcher:
 
         pruned = ix.postings.filter(F.col("term_id").isin(uniq_tids))
         phrase_ddl = f"doc_id long, score float, phrase_freq {freq_t}"
-        if self.aligned:
-            cands = pruned.mapInPandas(_aligned_kernel(kernel), schema=phrase_ddl)
-        else:
-            cands = pruned.groupBy("shard_id").applyInPandas(kernel, schema=phrase_ddl)
+        cands = map_shards(pruned, kernel, phrase_ddl, self._aligned)
         top = cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         top = top.withColumn("rank", F.row_number().over(w))
@@ -3825,21 +3510,19 @@ class BM25Searcher:
         uniq_tids = sorted(set(slot_tids) | set(exp_tids))
         avgdl, k1, b, dps = ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(shard_id: int, pdf: pd.DataFrame, _) -> pd.DataFrame:
             empty = pd.DataFrame(
                 {"doc_id": pd.Series([], dtype=np.int64),
                  "score": pd.Series([], dtype=np.float32),
                  "phrase_freq": pd.Series([], dtype=np.int64)}
             )
-            if pdf.empty:
-                return empty
             by_tid = {tid: g for tid, g in pdf.groupby("term_id")}
             if any(tid not in by_tid for tid in slot_tids):
                 return empty  # this shard lacks a fixed phrase term
             last_parts = [by_tid[tid] for tid in exp_tids if tid in by_tid]
             if not last_parts:
                 return empty  # no expansion term present in this shard
-            base = int(pdf["shard_id"].iloc[0]) * dps
+            base = shard_id * dps
             slots = [by_tid[tid] for tid in slot_tids]
             slots.append(
                 last_parts[0] if len(last_parts) == 1 else pd.concat(last_parts)
@@ -3850,10 +3533,7 @@ class BM25Searcher:
 
         pruned = ix.postings.filter(F.col("term_id").isin(uniq_tids))
         phrase_ddl = "doc_id long, score float, phrase_freq long"
-        if self.aligned:
-            cands = pruned.mapInPandas(_aligned_kernel(kernel), schema=phrase_ddl)
-        else:
-            cands = pruned.groupBy("shard_id").applyInPandas(kernel, schema=phrase_ddl)
+        cands = map_shards(pruned, kernel, phrase_ddl, self._aligned)
         top = cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         top = top.withColumn("rank", F.row_number().over(w))
@@ -4002,14 +3682,8 @@ class BM25Searcher:
 
         avgdl, k1, b, dps = ix.avgdl, cfg.k1, cfg.b, cfg.docs_per_shard
 
-        def kernel(left: pd.DataFrame) -> pd.DataFrame:
-            if left.empty:
-                return pd.DataFrame(
-                    {"query_id": pd.Series([], dtype=np.int64),
-                     "doc_id": pd.Series([], dtype=np.int64),
-                     "score": pd.Series([], dtype=np.float32)}
-                )
-            base = int(left["shard_id"].iloc[0]) * dps
+        def kernel(shard_id: int, left: pd.DataFrame, _) -> pd.DataFrame:
+            base = shard_id * dps
             by_tid = {tid: g for tid, g in left.groupby("term_id")}
             # per-shard decode+score memo: a term shared by several
             # queries is decoded and contrib-scored ONCE; each query
@@ -4054,10 +3728,7 @@ class BM25Searcher:
 
         pruned_union = ix.postings.filter(F.col("term_id").isin(list(union_tids)))
         batch_ddl = "query_id long, doc_id long, score float"
-        if self.aligned:
-            cands = pruned_union.mapInPandas(_aligned_kernel(kernel), schema=batch_ddl)
-        else:
-            cands = pruned_union.groupBy("shard_id").applyInPandas(kernel, schema=batch_ddl)
+        cands = map_shards(pruned_union, kernel, batch_ddl, self._aligned)
         kmap = {qid: k for qid, k, _, _ in per_query}
         kdf = self._spark.createDataFrame(
             [(qid, k) for qid, k in kmap.items()], "query_id long, qk int"

@@ -37,7 +37,8 @@ from ..functions.analyze import analyze_query
 from ..functions.bm25 import idf as idf_fn
 from ..operators.wand import score_shard_exact
 from ..plans.build import IndexFrames, build_index, read_index, write_index
-from ..plans.query import _CAND_DDL, _RESULT_DDL, _aligned_kernel, aligned_layout_ok
+from ..plans.query import _CAND_DDL, _RESULT_DDL
+from ..plans.shard_scan import aligned_layout_ok, allowed_mask, map_shards, presence_mask
 
 SEG_BASE = 1 << 40  # doc_id space per segment
 
@@ -707,8 +708,6 @@ class SegmentedSearcher:
         import numpy as np
         import pandas as pd
 
-        from ..operators.wand import _decode_term_blocks
-
         cfg = self.cfg
         req_terms = sorted(set(analyze_query(filter_text, cfg)))
         not_terms = sorted(set(analyze_query(must_not, cfg)))
@@ -728,13 +727,14 @@ class SegmentedSearcher:
             return empty
 
         # per-segment (required tids, excluded tids); a segment absent
-        # from the dict is excluded wholesale (lacks a required term)
+        # from the dict is excluded wholesale (lacks every required term,
+        # or one of them under AND)
         spec_by_seg: dict[int, tuple[list[int], list[int]]] = {}
         seg_scan: dict[int, list[int]] = {}
         for sid in self.seg_ids:
             tids = seg_tids[sid]
             req = sorted(tids[t] for t in req_terms if t in tids)
-            if mode == "and" and len(req) < len(req_terms):
+            if (mode == "and" and len(req) < len(req_terms)) or (req_terms and not req):
                 continue
             nots = sorted(tids[t] for t in not_terms if t in tids)
             spec_by_seg[sid] = (req, nots)
@@ -743,62 +743,25 @@ class SegmentedSearcher:
         if not spec_by_seg:
             return empty
         dps, sps = cfg.docs_per_shard, self._shards_per_seg
-        n_req, md = len(req_terms), mode
 
-        def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        def kernel(shard_id: int, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             out = right[out_cols]
             if right.empty:
                 return out
-            shard = int(right["shard_id"].iloc[0])
-            spec = spec_by_seg.get(shard // sps)
+            spec = spec_by_seg.get(shard_id // sps)
             if spec is None:
                 return out.iloc[0:0]
-            req, nots = spec
-            base = shard * dps
-            allowed = np.zeros(dps, dtype=bool)
-            allowed[right["doc_id"].to_numpy(np.int64) - base] = (
-                right["_allowed"].to_numpy(bool)
-            )
-            groups = (
-                {tid: g for tid, g in left.groupby("term_id")}
-                if not left.empty else {}
-            )
-            if n_req:
-                seen = np.zeros(dps, dtype=np.int32)
-                n_present = 0
-                for tid in req:
-                    g = groups.get(tid)
-                    if g is None:
-                        continue
-                    dec = _decode_term_blocks(g, base)
-                    if dec is None:
-                        continue
-                    seen[dec[0]] += 1
-                    n_present += 1
-                if md == "and":
-                    if n_present < n_req:
-                        return out.iloc[0:0]
-                    allowed &= seen == n_req
-                else:
-                    allowed &= seen > 0
-            for tid in nots:
-                g = groups.get(tid)
-                if g is not None:
-                    dec = _decode_term_blocks(g, base)
-                    if dec is not None:
-                        allowed[dec[0]] = False
-            keep = allowed[right["doc_id"].to_numpy(np.int64) - base]
-            return out[keep]
+            base = shard_id * dps
+            allowed = allowed_mask(right, shard_id, dps)
+            if not presence_mask(allowed, left, *spec, mode, base):
+                return out.iloc[0:0]
+            return out[allowed[right["doc_id"].to_numpy(np.int64) - base]]
 
-        docmap_lite = self._docmap_allowed(doc_filter, ["shard_id", *out_cols])
         pruned = self._postings_all.filter(
             self._scan_filter(seg_scan) if seg_scan else F.lit(False)
         )
-        return (
-            pruned.groupBy("shard_id")
-            .cogroup(docmap_lite.groupBy("shard_id"))
-            .applyInPandas(kernel, schema=ddl)
-        )
+        return map_shards(pruned, kernel, ddl, self._aligned,
+                          self._docmap_allowed(doc_filter, ["shard_id", *out_cols]))
 
     def count(
         self,
@@ -879,21 +842,19 @@ class SegmentedSearcher:
             return empty
         sps = self._shards_per_seg
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(shard_id: int, pdf: pd.DataFrame, _) -> pd.DataFrame:
             e = pd.DataFrame(
                 {"doc_id": pd.Series([], dtype=np.int64),
                  "score": pd.Series([], dtype=np.float32),
                  "phrase_freq": pd.Series([], dtype=freq_np)}
             )
-            if pdf.empty:
-                return e
-            slots = slots_by_seg.get(int(pdf["shard_id"].iloc[0]) // sps)
+            slots = slots_by_seg.get(shard_id // sps)
             if slots is None:
                 return e
             by_tid = {tid: g for tid, g in pdf.groupby("term_id")}
             if any(tid not in by_tid for tid in slots):
                 return e
-            base = int(pdf["shard_id"].iloc[0]) * dps
+            base = shard_id * dps
             slot_pdfs = [by_tid[tid] for tid in slots]
             if unordered:
                 return score_shard_phrase_unordered(
@@ -904,10 +865,7 @@ class SegmentedSearcher:
             )
 
         pruned = self._postings_all.filter(self._scan_filter(seg_scan))
-        if self._aligned:
-            cands = pruned.mapInPandas(_aligned_kernel(kernel), schema=ddl)
-        else:
-            cands = pruned.groupBy("shard_id").applyInPandas(kernel, schema=ddl)
+        cands = map_shards(pruned, kernel, ddl, self._aligned)
         top = cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         return (
@@ -974,9 +932,10 @@ class SegmentedSearcher:
         empty = pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
                               "score": pd.Series([], dtype=np.float32)})
 
-        def _score(pdf: pd.DataFrame, allowed) -> pd.DataFrame:
-            sid = int(pdf["shard_id"].iloc[0]) // sps
-            metas = meta_by_seg.get(sid)
+        def kernel(shard_id: int, pdf: pd.DataFrame, right: pd.DataFrame | None) -> pd.DataFrame:
+            if pdf.empty or (right is not None and right.empty):
+                return empty
+            metas = meta_by_seg.get(shard_id // sps)
             if metas is None:
                 return empty
             by_tid = {tid: g for tid, g in pdf.groupby("term_id")}
@@ -985,46 +944,22 @@ class SegmentedSearcher:
             ]
             if not blocks or (md == "and" and len(blocks) < n_req):
                 return empty
-            base = int(pdf["shard_id"].iloc[0]) * dps
-            return score_shard_exact(blocks, base, dps, allowed, kk, md, avgdl, k1, b)
+            return score_shard_exact(blocks, shard_id * dps, dps,
+                                     allowed_mask(right, shard_id, dps),
+                                     kk, md, avgdl, k1, b)
 
-        pruned = self._postings_all.filter(self._scan_filter(seg_scan))
-        if doc_filter is not None or self._tombs is not None:
-            # ES filter context / soft-delete tombstones on the NRT path:
-            # the shard's docmap slice carries the allowed-mask, applied
-            # in-kernel BEFORE the shard-local top-k cap (docs absent from
-            # the mask never score) — so a tombstone can never under-fill
-            # the top-k, and survivors' scores are bit-identical to the
-            # unfiltered ranking restricted to live docs
-            docmap_lite = self._docmap_allowed(
-                doc_filter, ["shard_id", "doc_id"]
-            )
-
-            def kernel_f(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-                if left.empty or right.empty:
-                    return empty
-                base = int(right["shard_id"].iloc[0]) * dps
-                allowed = np.zeros(dps, dtype=bool)
-                allowed[right["doc_id"].to_numpy(np.int64) - base] = (
-                    right["_allowed"].to_numpy(bool)
-                )
-                return _score(left, allowed)
-
-            cands = (
-                pruned.groupBy("shard_id")
-                .cogroup(docmap_lite.groupBy("shard_id"))
-                .applyInPandas(kernel_f, schema=_CAND_DDL)
-            )
-        else:
-            def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-                if pdf.empty:
-                    return empty
-                return _score(pdf, None)
-
-            if self._aligned:
-                cands = pruned.mapInPandas(_aligned_kernel(kernel), schema=_CAND_DDL)
-            else:
-                cands = pruned.groupBy("shard_id").applyInPandas(kernel, schema=_CAND_DDL)
+        # ES filter context / soft-delete tombstones on the NRT path: the
+        # shard's docmap slice carries the allowed-mask, applied in-kernel
+        # BEFORE the shard-local top-k cap (docs absent from the mask never
+        # score) — so a tombstone can never under-fill the top-k, and
+        # survivors' scores are bit-identical to the unfiltered ranking
+        # restricted to live docs
+        filtered = doc_filter is not None or self._tombs is not None
+        cands = map_shards(
+            self._postings_all.filter(self._scan_filter(seg_scan)), kernel,
+            _CAND_DDL, self._aligned,
+            self._docmap_allowed(doc_filter, ["shard_id", "doc_id"]) if filtered else None,
+        )
         top = cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         top = top.withColumn("rank", F.row_number().over(w))

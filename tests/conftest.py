@@ -1,9 +1,25 @@
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from bitcoin_ledger_2es_spark.session import get_spark
 from bitcoin_ledger_2es_spark.sources.synth import gen_transcripts_pdf
+
+_JOB_GROUPS = itertools.count()
+
+
+def count_jobs(sc, fn) -> int:
+    """Run ``fn()`` under a fresh Spark job group; return how many jobs it
+    started."""
+    tag = f"count-jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
 
 
 @pytest.fixture(scope="session")

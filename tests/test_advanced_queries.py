@@ -10,6 +10,8 @@ from bitcoin_ledger_2es_spark.functions.analyze import analyze_query, tokenize_s
 from bitcoin_ledger_2es_spark.functions.bm25 import idf as idf_fn
 from bitcoin_ledger_2es_spark.oracle import PandasOracle
 
+from .conftest import count_jobs
+
 CFG = DEFAULT.with_(docs_per_shard=128, block_size=32, store_positions=True)
 
 
@@ -228,14 +230,10 @@ def test_mtermvectors_matches_per_doc_and_is_one_job(searcher):
     assert [list(p) for p in got["positions"]] == [list(p) for p in exp["positions"]]
 
     sc = searcher.ix.postings.sparkSession.sparkContext
-    for tag, req in (("mtv1", [3]), ("mtv3", [3, 77, 150])):
-        sc.setJobGroup(tag, tag)
-        try:
-            searcher.mtermvectors(req).collect()
-        finally:
-            sc.setJobGroup(None, None)
-    n1 = len(sc.statusTracker().getJobIdsForGroup("mtv1"))
-    n3 = len(sc.statusTracker().getJobIdsForGroup("mtv3"))
+    n1, n3 = (
+        count_jobs(sc, lambda: searcher.mtermvectors(req).collect())
+        for req in ([3], [3, 77, 150])
+    )
     assert n3 == n1, f"mtermvectors jobs grew with doc count: {n1} -> {n3}"
 
 

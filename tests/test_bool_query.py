@@ -11,6 +11,7 @@ from bitcoin_ledger_2es_spark import BM25Searcher, PandasOracle, build_index
 from bitcoin_ledger_2es_spark.config import DEFAULT
 from bitcoin_ledger_2es_spark.plans.build import read_index, write_index
 
+from .conftest import count_jobs
 from .test_end_to_end import corpus_docs_pdf
 
 CFG = DEFAULT.with_(docs_per_shard=256, block_size=32)
@@ -66,7 +67,8 @@ def test_bool_query_matches_oracle(ix, oracle):
 def test_bool_query_aligned_identical(spark, tiny_df, ix, oracle, tmp_path):
     path = str(tmp_path / "ix")
     write_index(ix, path)
-    s = BM25Searcher(read_index(spark, path, CFG), aligned=True)
+    s = BM25Searcher(read_index(spark, path, CFG))
+    assert s.aligned  # the on-disk layout selects the zero-exchange scan
     for must, should, must_not, min_m in CASES[:6]:
         _check(s, oracle, must, should, must_not, min_m)
 
@@ -268,14 +270,10 @@ def test_suggest_single_pass_and_ranking(ix, oracle):
 
     # one driver job per action, independent of token count
     sc = ix.dictionary.sparkSession.sparkContext
-    for tag, text in (("sg1", "w000"), ("sg5", "w000 w0x05 w0300x zz qq9")):
-        sc.setJobGroup(tag, tag)
-        try:
-            s.suggest(text, fuzziness=2, size=4).collect()
-        finally:
-            sc.setJobGroup(None, None)
-    n1 = len(sc.statusTracker().getJobIdsForGroup("sg1"))
-    n5 = len(sc.statusTracker().getJobIdsForGroup("sg5"))
+    n1, n5 = (
+        count_jobs(sc, lambda: s.suggest(text, fuzziness=2, size=4).collect())
+        for text in ("w000", "w000 w0x05 w0300x zz qq9")
+    )
     assert n5 == n1, f"suggest jobs grew with token count: {n1} -> {n5}"
 
 

@@ -11,6 +11,8 @@ from bitcoin_ledger_2es_spark import BM25Searcher, build_index
 from bitcoin_ledger_2es_spark.config import DEFAULT
 from bitcoin_ledger_2es_spark.oracle import PandasOracle
 
+from .conftest import count_jobs
+
 CFG = DEFAULT.with_(docs_per_shard=128, block_size=32, store_positions=True)
 
 
@@ -504,17 +506,12 @@ def test_dis_max_jobs_independent_of_subquery_count(searcher):
     sc = searcher.ix.postings.sparkSession.sparkContext
     # warm the term cache so dictionary lookups don't add jobs unevenly
     searcher._lookup_terms(["w0001", "w0002", "w0003", "w0005", "w0008"])
-    for tag, qs in (
-        ("dm2", ["w0001 w0002", "w0003"]),
-        ("dm4", ["w0001 w0002", "w0003", "w0005", "w0008"]),
-    ):
-        sc.setJobGroup(tag, tag)
-        try:
-            searcher.dis_max(qs, tie_breaker=0.3, k=5, with_meta=False).collect()
-        finally:
-            sc.setJobGroup(None, None)
-    n2 = len(sc.statusTracker().getJobIdsForGroup("dm2"))
-    n4 = len(sc.statusTracker().getJobIdsForGroup("dm4"))
+    n2, n4 = (
+        count_jobs(sc, lambda: searcher.dis_max(
+            qs, tie_breaker=0.3, k=5, with_meta=False).collect())
+        for qs in (["w0001 w0002", "w0003"],
+                   ["w0001 w0002", "w0003", "w0005", "w0008"])
+    )
     assert n4 == n2, f"dis_max jobs grew with subquery count: {n2} -> {n4}"
 
 

@@ -18,6 +18,8 @@ from bitcoin_ledger_2es_spark.streaming.incremental import (
     start_incremental_index,
 )
 
+from .conftest import count_jobs
+
 CFG = DEFAULT.with_(docs_per_shard=256, block_size=32)
 
 
@@ -229,18 +231,14 @@ def test_segmented_query_jobs_independent_of_segment_count(spark, tmp_path):
             build_segment(spark, df, root, i, CFG)
         return root
 
-    def jobs_for_query(root: str, tag: str) -> int:
+    def jobs_for_query(root: str) -> int:
         s = SegmentedSearcher(spark, root, CFG)
-        sc = spark.sparkContext
-        sc.setJobGroup(tag, tag)
-        try:
-            s.top_k("w0000 w0005", k=10, mode="or").collect()
-        finally:
-            sc.setJobGroup(None, None)
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
+        return count_jobs(
+            spark.sparkContext, lambda: s.top_k("w0000 w0005", k=10, mode="or").collect()
+        )
 
-    n2 = jobs_for_query(build_root(2), "segq2")
-    n5 = jobs_for_query(build_root(5), "segq5")
+    n2 = jobs_for_query(build_root(2))
+    n5 = jobs_for_query(build_root(5))
     assert n2 > 0
     assert n5 == n2, f"jobs grew with segment count: 2 segs -> {n2}, 5 segs -> {n5}"
 

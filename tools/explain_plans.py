@@ -43,12 +43,13 @@ def main() -> None:
 
     sections: list[tuple[str, str]] = []
 
-    res = BM25Searcher(on_disk, aligned=False).top_k("w0004 w0123 w0200", k=10)
+    res = BM25Searcher(ix).top_k("w0004 w0123 w0200", k=10)  # in-memory -> grouped
     sections.append(
-        ("BM25 top-k, grouped path (aligned=False): query-then-fetch with "
-         "one shard exchange", explain_str(res))
+        ("BM25 top-k, grouped lowering (the in-memory index has no on-disk "
+         "layout to align with): query-then-fetch with one shard exchange",
+         explain_str(res))
     )
-    res_aligned = BM25Searcher(on_disk).top_k(  # auto-aligned on-disk default
+    res_aligned = BM25Searcher(on_disk).top_k(  # on-disk layout -> aligned
         "w0004 w0123 w0200", k=10, with_meta=False
     )
     sections.append(
