@@ -165,6 +165,16 @@ def test_aligned_guard_oversized_file(spark, on_disk, tiny_df):
         assert not BM25Searcher(on_disk).aligned
 
 
+def test_aligned_msearch_identical(spark, on_disk):
+    """msearch keeps per-query rank order under both lowerings."""
+    qset = QSET.iloc[:3]
+    a, b = (
+        s.top_k_batch(qset).orderBy("query_id", "rank").toPandas()
+        for s in _searchers(spark, on_disk)
+    )
+    pd.testing.assert_frame_equal(a, b)
+
+
 def test_on_disk_top_k_job_count(spark, on_disk):
     """An unfiltered on-disk top_k runs 3 Spark jobs once its terms are
     cached, one more for the cold dictionary lookup, and 2 cold without
